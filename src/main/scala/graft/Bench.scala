@@ -1,19 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bench")
 
     // optional comma-separated name filter for single-query timing runs
     // (SPARK_GRAFT_ONLY=q_x,q_y); empty = the full registry
@@ -51,6 +41,11 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
     }
 
+    // every query that threw in any pass: its time is still recorded
+    // (the headline keeps its shape), but the record is stamped
+    // valid:false and names it
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+
     def pass(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -62,6 +57,7 @@ object Bench {
         // would let Catalyst prune the work away)
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
+          failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         name -> (System.nanoTime() - t0) / 1e9
@@ -265,10 +261,12 @@ object Bench {
     // gate (the r11 driver run: loadavg_start 6.35, skew 0.119, cold
     // +58% vs the quiet record). The loadavg_start <= 2 ceiling closes
     // that hole; an unknown loadavg (platform returns -1) is honest
-    // "not validated", recorded false.
-    val valid = skew <= 0.25 && loadStart.exists(_ <= 2.0)
+    // "not validated", recorded false. A query that threw also voids
+    // the record: its time measures the failure, not the plan.
+    val valid = skew <= 0.25 && loadStart.exists(_ <= 2.0) && failed.isEmpty
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"queries_warm":$qsWarm,"cold_total":${ms(coldTotal)},"warm_total":${ms(warmTotal)},"cold_total_first":${ms(coldFirstTotal)},"loadavg_start":${msOpt(loadStart)},"loadavg_first":${msOpt(loadFirst)},"loadavg_end":${msOpt(loadEnd)},"probe_io_mb":${ms(probeIoMb)},"probe_io_sec":${ms(probeIoSec)},"cold_warm_skew":${ms(skew)},"peak_heap_mb":${ms(peakHeapMb)},"valid":$valid,"attempts":$attempts,"skew_attempts":$skewAttempts,"boot_id":${bootId.map("\"" + _ + "\"").getOrElse("null")},"uptime_sec":${uptimeSec.map(u => f"$u%.0f").getOrElse("null")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"queries_warm":$qsWarm,"cold_total":${ms(coldTotal)},"warm_total":${ms(warmTotal)},"cold_total_first":${ms(coldFirstTotal)},"loadavg_start":${msOpt(loadStart)},"loadavg_first":${msOpt(loadFirst)},"loadavg_end":${msOpt(loadEnd)},"probe_io_mb":${ms(probeIoMb)},"probe_io_sec":${ms(probeIoSec)},"cold_warm_skew":${ms(skew)},"peak_heap_mb":${ms(peakHeapMb)},"failed":$failedJson,"valid":$valid,"attempts":$attempts,"skew_attempts":$skewAttempts,"boot_id":${bootId.map("\"" + _ + "\"").getOrElse("null")},"uptime_sec":${uptimeSec.map(u => f"$u%.0f").getOrElse("null")},"sf":"$sfDir"}"""
     if (only.isEmpty) { // a filtered run must not clobber the full record
       try {
         // cwd-relative: lands in whatever checkout ran the bench

@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump for local iteration
     // (same convention as Bench); the driver never sets it.
@@ -32,6 +24,7 @@ object Verify {
     // an exempt pin dropped before its product materialized warns and
     // counts (ShardedPrefixSum.unmaterializedReleases).
     val trimEvery = sys.env.getOrElse("SPARK_GRAFT_TRIM_EVERY", "16").toInt
+    val failed = Seq.newBuilder[String]
     selected.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, fn), i) =>
       if (trimEvery > 0 && i > 0 && i % trimEvery == 0) {
         graft.operators.ShardedPrefixSum.releaseAll()
@@ -43,6 +36,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -61,6 +55,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // one summary line, so a failure deep in the per-query log is not
+    // missed; the exit code stays 0 (the oracle compare reports the
+    // missing outputs)
+    val failedNames = failed.result()
+    System.err.println(s"[verify] failed ${failedNames.size}: ${failedNames.mkString(",")}")
     spark.stop()
   }
 }

@@ -327,7 +327,10 @@ object Dedup {
     * classic alternative is Kiveris et al.'s large-star/small-star,
     * same bound). Each round is two equi-joins + one aggregation;
     * iterates driver-side with localCheckpoint truncating lineage, and
-    * stops at the fixpoint (no label changed).
+    * stops at the fixpoint (no label changed). Each round's checkpoint
+    * is released once the next one has materialized, and the edge
+    * checkpoint before returning: the result holds only the last
+    * round's checkpoint.
     *
     * Only nodes appearing in `pairs` are labeled; callers union isolated
     * ids back (see [[nearDupSurvivors]]). */
@@ -363,14 +366,23 @@ object Dedup {
         .select(prop("id"), col("old"),
           least(prop("lbl"), coalesce(col("pLbl"), prop("lbl"))).as("lbl"))
         .localCheckpoint()
+      releaseCheckpoint(labels) // eager: `jumped` no longer reads it
       val changed = jumped.filter(col("lbl") =!= col("old")).limit(1).count()
       converged = changed == 0
       labels = jumped.select(col("id"), col("lbl"))
       it += 1
     }
+    releaseCheckpoint(sym)
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     labels.select(col("id"), col("lbl").as("component"))
   }
+
+  /** Unpersists the RDD a `localCheckpoint()`ed frame is rooted at. The
+    * frame, and every plan still built on it, can no longer run. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   /** Keep-one-per-cluster: the doc set minus near-duplicates. Survivors
     * are the minimum id of each connected component of the pair graph,

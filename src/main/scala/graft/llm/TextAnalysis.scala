@@ -580,8 +580,8 @@ object TextAnalysis {
     * the term, one per-doc top-1 window. Skew note: the df side joins
     * back co-partitioned on its own grouping key - AQE's skew rule
     * cannot split that shape; a diagnosed hot term routes through
-    * [[graft.operators.Skew.saltedJoin]] (tools/SkewProbe measurement,
-    * PLANS.md "skew-join adoption"). */
+    * [[graft.operators.Skew.saltedJoin]] (measurement in PLANS.md
+    * "skew-join adoption"). */
   def topTermPerDoc(df: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
     val words = df.select(col(idCol),
@@ -759,7 +759,7 @@ object TextAnalysis {
     * grouping key, the regime AQE's skew rule cannot split (it needs a
     * fresh shuffle on both sides) - under a diagnosed hot term, route
     * the join through [[graft.operators.Skew.saltedJoin]]; measured
-    * trade-off in tools/SkewProbe + PLANS.md "skew-join adoption". */
+    * trade-off in PLANS.md "skew-join adoption". */
   def withCommonnessScore(df: DataFrame, idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame = {
     val words = df.select(col(idCol),

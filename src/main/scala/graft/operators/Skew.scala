@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * replicates `salts` times, and the join key becomes (key, salt) - one
   * hot key now lands on `salts` reducers.
   *
-  * Measured (tools/SkewProbe, sf0.1 documents tokens + a planted
-  * 65%-hot term, local[32]): co-partitioned dim - AQE leaves the hot
+  * Measured (PLANS.md "skew-join adoption": sf0.1 documents tokens + a
+  * planted 65%-hot term, local[32]): co-partitioned dim - AQE leaves the hot
   * reducer at 509k rows while salts=16 bounds it at 94k; exchange-fed
   * dim - AQE's split fires (skew marker in the final adaptive plan)
   * and salting is unnecessary. Salting costs ~1.7x wall when skew is

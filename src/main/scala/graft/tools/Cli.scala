@@ -45,15 +45,7 @@ import graft.sources.Readers
 object Cli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-cli", shufflePartitions = 8)
     val code = try run(args, spark) finally spark.stop()
     if (code != 0) sys.exit(code)
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `explain("formatted")` for named registry queries to files -
@@ -10,10 +9,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> <query>[,<query>...]
   *        [sfDir]
   *
-  * Session configs mirror graft.Bench so the dumped plan is the benched
-  * plan. The dump is the ANALYZED initial physical plan (AQE
-  * `isFinalPlan=false`) - the shape Catalyst commits to before runtime
-  * re-optimization, which is what plan-level claims (join strategy,
+  * The session is graft.LocalSession, as in graft.Bench, so the dumped
+  * plan is the benched plan. The dump is the ANALYZED initial physical
+  * plan (AQE `isFinalPlan=false`) - the shape Catalyst commits to before
+  * runtime re-optimization, which is what plan-level claims (join strategy,
   * exchange count, pushdown) are checked against.
   */
 object PlanDump {
@@ -23,15 +22,7 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-plan-dump")
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

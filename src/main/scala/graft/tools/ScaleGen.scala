@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence data generator: expands an sf directory by an
@@ -45,13 +45,7 @@ object ScaleGen {
     val copies = copiesS.toInt
     // 100 * Stride = 2.0e9 is the Int-range ceiling for the offset keys.
     require(copies >= 1 && copies <= 100, s"copies $copies outside [1,100]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-scalegen")
     new java.io.File(out).mkdirs()
 
     def read(name: String): DataFrame =

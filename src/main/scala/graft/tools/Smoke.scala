@@ -1,19 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-shaped smoke check: runs SparkEntry.entry the way the harness
   * does (t1), prints row count + a sample, and cross-checks the
   * queries/oracleSql registries for orphans. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("graft-smoke")
 
     val df = graft.SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())

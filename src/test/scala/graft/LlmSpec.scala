@@ -454,6 +454,20 @@ class LlmSpec extends SparkSpec {
     assert(survivors == expected)
   }
 
+  test("connected components release every round's checkpoint but the last") {
+    // a 64-node chain: pointer jumping takes several rounds to label it,
+    // and each round localCheckpoints its labels
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    val got = Dedup.connectedComponents(edges).as[(Long, Long)].collect()
+    assert(got.toSet == (0L to 63L).map(_ -> 0L).toSet)
+    // the result is rooted at the last round's checkpoint only; anything
+    // more waits for the ContextCleaner, i.e. for a driver GC
+    assert(persisted - before <= 1,
+      s"${persisted - before} RDDs left persisted by one connectedComponents call")
+  }
+
   test("nearDupClusterPick keeps the best-scored member per component") {
     // two components: {1,2,3} and {10,11}; scores favor 2 and 11;
     // 20 ties with nobody (not in any pair -> not in the output)
