@@ -3,13 +3,10 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession("graft-bench")
-
-    // optional comma-separated name filter for single-query timing runs
+    // optional name filter for single-query timing runs
     // (SPARK_GRAFT_ONLY=q_x,q_y); empty = the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val only = graft.registry.Registry.only()
+    val spark = LocalSession("graft-bench")
 
     // WITHIN-pass trim, run every SPARK_GRAFT_TRIM_EVERY queries
     // (default 16; 0 disables): several operators persist() internal

@@ -5,16 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = LocalSession("graft-verify")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump for local iteration
     // (same convention as Bench); the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    val only = graft.registry.Registry.only()
+    val spark = LocalSession("graft-verify")
+    new java.io.File(outDir).mkdirs()
+    val selected = SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
     // periodic trim, same shape as Bench's within-pass sweep: several
     // operators persist internal frames whose lifecycle is the
     // caller's, so a full 170-query dump used to accumulate every

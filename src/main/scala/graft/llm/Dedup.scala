@@ -551,7 +551,7 @@ object Dedup {
     * `spark.catalog.clearCache()` (the frame is internal, so the caller
     * holds no handle to unpersist) - long sessions that call it
     * repeatedly accumulate cached shingle partitions. Use this variant
-    * when the pair list will be consumed more than once (SparkEntry's
+    * when the pair list will be consumed more than once (the registry's
     * session memo does): the eager checkpoint pins ONLY the O(pairs)
     * result, and the O(corpus) shingle blocks are freed immediately. */
   def minhashMd5PairsCheckpointed(df: DataFrame, idCol: String = "doc_id",

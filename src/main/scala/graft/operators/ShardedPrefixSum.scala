@@ -25,10 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object ShardedPrefixSum {
 
+  /** Cap on live cap-counted pins. */
+  private val MaxPinned = 8
+
   /** Live pinned materializations, oldest first. Every [[cumBefore]]
     * call persists its ranged frame (the correctness pin - see the
     * body comment) and registers it here; the registry caps live
-    * CAP-COUNTED pins at `graft.pfx.maxPinned` (default 8) by
+    * CAP-COUNTED pins at [[MaxPinned]] by
     * unpersisting the oldest, so a long-lived session issuing many
     * distinct packing/profile queries holds O(1) pinned entries
     * instead of leaking one session-lifetime cache entry per call.
@@ -143,9 +146,6 @@ object ShardedPrefixSum {
     try df.sparkSession.sparkContext.isStopped catch { case _: Throwable => true }
 
   private def registerPin(df: DataFrame, capExempt: Boolean): Unit = {
-    val cap = math.max(1,
-      try df.sparkSession.conf.get("graft.pfx.maxPinned", "8").toInt
-      catch { case _: Exception => 8 })
     pins.synchronized {
       // drop pins stranded by stopped sessions (sequential test
       // suites): they hold the dead session's plans and state
@@ -156,7 +156,7 @@ object ShardedPrefixSum {
       if (capExempt) exemptPins.addLast(pin)
       else {
         pins.addLast(pin)
-        while (pins.size > cap) safeUnpersist(pins.pollFirst().df)
+        while (pins.size > MaxPinned) safeUnpersist(pins.pollFirst().df)
       }
     }
   }
@@ -175,16 +175,16 @@ object ShardedPrefixSum {
     * column in `df` is cached for the duration of the query.
     *
     * Pin lifecycle: the persisted frame is registered in a bounded
-    * FIFO ([[pinnedCount]], cap `graft.pfx.maxPinned`, default 8); the
+    * FIFO ([[pinnedCount]], cap [[MaxPinned]]); the
     * 9th subsequent call unpersists this one. The single-partitioner
     * guarantee covers every execution COMPILED while the pin is live -
     * an evicted pin's cached blocks recompute through the same already
     * -sampled ShuffleDependency, so running plans stay exact - but a
-    * FRESH compilation of a product older than `maxPinned` later calls
+    * FRESH compilation of a product older than `MaxPinned` later calls
     * would re-plan the exchange per consumer and lose the guarantee.
     * Consume each product (as every library caller does, immediately)
-    * before issuing `maxPinned` further prefix sums, or raise the cap
-    * for unusual fan-out sessions. [[releaseAll]] drops everything. */
+    * before issuing `MaxPinned` further prefix sums. [[releaseAll]]
+    * drops everything. */
   def cumBefore(df: DataFrame, tokenCol: String,
                 strataCol: String, orderCol: String,
                 numShards: Int, outCol: String): DataFrame =

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * produce. This upgrades the mutation/repair operator family from
   * unit-test-only coverage to the driver's row/schema/hash oracle gate.
   *
-  * Every derivation is documented by the matching SQL in
-  * SparkEntry.oracleSql - keep the two in lockstep.
+  * Every derivation is mirrored by a CTE in the oracle SQL of the
+  * graft.registry.CoreQueries entry that reads it.
   */
 object TpchShapes {
 

@@ -9,6 +9,9 @@ package graft.tools
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    // SPARK_GRAFT_ONLY=a,b restricts the audit (same convention as
+    // Bench/Verify) for single-query plan iterations
+    val only = graft.registry.Registry.only()
     val spark = graft.LocalSession("graft-plan-audit")
 
     val interesting = Seq(
@@ -92,12 +95,6 @@ object PlanAudit {
       "q_ann_ivfpq_artifact", // IVF-PQ through the persisted artifact (r12)
       "q_mm_audio_phash", // real WAV decode -> window grid -> pHash (r12)
       "q_mm_video_frames") // AVI walk -> BMP frame decode -> sampling (r12)
-
-    // SPARK_GRAFT_ONLY=a,b restricts the audit (same convention as
-    // Bench/Verify) for single-query plan iterations
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
 
     interesting.filter(n => only.forall(_.contains(n))).foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)

@@ -115,7 +115,7 @@ class ProfileDistributedSpec extends SparkSpec {
     // its ranged frame (the single-partitioner pin), so without a
     // lifecycle a session issuing many packing/profile queries would
     // accumulate one session-lifetime cache entry per call. The FIFO
-    // registry caps live pins at graft.pfx.maxPinned (default 8);
+    // registry caps live pins at ShardedPrefixSum.MaxPinned (8);
     // this drives 25 DISTINCT prefix sums - each consumed immediately,
     // the documented contract - and asserts bounded cache growth with
     // every answer still exact.
