@@ -1,19 +1,20 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.registry.{CoreQueries, Registry}
+import graft.registry.Registry
+import graft.registry.CoreQueries.pipelineResult
 
-/** Driver contract: the flagship `entry` plus the query registry. Each
-  * query is one [[graft.registry.Q]] (name, Spark plan, DuckDB oracle)
-  * in a per-family module under `graft.registry`; `queries` and
-  * `oracleSql` are name-keyed views of that one list. */
+/** The engine's query surface: the flagship `entry` plus the query
+  * registry. Each query is one [[graft.registry.Q]] (name, Spark plan,
+  * DuckDB oracle) in a per-family module under `graft.registry`;
+  * `queries` and `oracleSql` are name-keyed views of that one list. */
 object SparkEntry {
 
   /** Flagship: the full --species pipeline (resolve -> group -> cascade ->
     * merge -> weak sync) over ortholog-shaped fixtures derived from the
     * sf0.001 test tables; returns the strong-ortholog picks. */
   def entry(spark: SparkSession): DataFrame =
-    CoreQueries.pipelineResult(spark, "/root/testdata/sf0.001").strongPicks
+    pipelineResult(spark, "/root/testdata/sf0.001").strongPicks
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> q.plan).toMap

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One registered query: its Spark plan over an sf dir, and the DuckDB
   * SQL that recomputes the same rows. Column names and types are aligned
-  * on both sides (the driver compare sorts columns by name and hashes
-  * values). */
+  * on both sides (the oracle compare, tools/compare_oracle.py, sorts
+  * columns by name and hashes values). */
 final case class Q(name: String, plan: (SparkSession, String) => DataFrame,
                    oracle: String)
 
