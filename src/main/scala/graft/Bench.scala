@@ -8,73 +8,24 @@ object Bench {
     val only = graft.registry.Registry.only()
     val spark = LocalSession("graft-bench")
 
-    // WITHIN-pass trim, run every SPARK_GRAFT_TRIM_EVERY queries
-    // (default 16; 0 disables): several operators persist() internal
-    // frames with "cache lifecycle is the caller's" (Dedup shingle
-    // frames, PrepPipeline scrub, BPE rounds), so one full pass used to
-    // accumulate every query's cached blocks - heap/GC pressure that the
-    // r06 driver session showed as a warm pass SLOWER than cold. The trim
-    // drops those blocks but KEEPS checkpointed RDDs: the session memo
-    // (pipeline/agr/minhash_md5 families) roots its shared results at
-    // localCheckpoint RDDs, which cannot recompute once unpersisted, and
-    // memo consumers are not adjacent in pass order (q_split_leakage_safe
-    // reads the minhash memo built ~40 queries earlier). Plain persists
-    // are recomputable by plan, so dropping them costs a recompute for
-    // every plan already compiled; the one correctness-sensitive class
-    // is a prefix-sum PIN under a memoized product whose consumer plan
-    // is first COMPILED after the sweep (see ShardedPrefixSum's
-    // exempt-pin note). That class is now machine-guarded, not prose-
-    // guarded: pipeline runs consume + release their own pins in-scope
-    // (memoized products are store/checkpoint-backed, pin-free), and
-    // releaseAll itself warns + counts any exempt pin dropped before
-    // its product ever materialized (unmaterializedReleases) - a sweep
-    // that could reopen the r13 nondeterminism announces itself.
-    val trimEvery = sys.env.getOrElse("SPARK_GRAFT_TRIM_EVERY", "16").toInt
-    def trimPassState(): Unit = {
-      graft.operators.ShardedPrefixSum.releaseAll() // drop stale pin refs too
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed)
-        .foreach(_.unpersist(blocking = false))
-    }
-
     // every query that threw in any pass: its time is still recorded
     // (the headline keeps its shape), but the record is stamped
     // valid:false and names it
     val failed = scala.collection.mutable.SortedSet.empty[String]
 
+    // one pass over the selection; each query releases what it
+    // materialized after its timed write (Scope)
     def pass(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-        .zipWithIndex
-        .map { case ((name, fn), i) =>
-        if (trimEvery > 0 && i > 0 && i % trimEvery == 0) trimPassState()
-        val t0 = System.nanoTime()
-        // noop write forces full evaluation of every column (a bare count()
-        // would let Catalyst prune the work away)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        name -> (System.nanoTime() - t0) / 1e9
+      Scope.registry(spark, sfDir, only) { (name, e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      } { (_, df) =>
+        // noop write forces full evaluation of every column (a bare
+        // count() would let Catalyst prune the work away)
+        df.write.format("noop").mode("overwrite").save()
+      }.map { r =>
+        if (r.failed) failed += r.name
+        r.name -> r.seconds
       }
-
-    // Release everything a pass leaves behind: memoized flagship results
-    // (whose plans are rooted at localCheckpoint RDDs - drop the memo
-    // BEFORE unpersisting, the RDDs cannot recompute), checkpoint/cache
-    // blocks, and streaming memory-sink temp views. Without this the
-    // second pass runs against a heap full of dead blocks (r03 measured
-    // the un-cleaned second pass 46% slower than the first).
-    def resetPassState(): Unit = {
-      graft.pipeline.Memo.clear()
-      graft.operators.ShardedPrefixSum.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.listTables().collect()
-        .filter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
-    }
 
     // N full passes (SPARK_GRAFT_PASSES, default 2): the first carries
     // JVM/codegen/classloader warmup. Headline per-query numbers are the
@@ -162,7 +113,8 @@ object Bench {
     }
     def runPasses(firstAttempt: Boolean): Seq[Seq[(String, Double)]] =
       (1 to nPasses).map { i =>
-        if (i > 1 || !firstAttempt) resetPassState()
+        // what the memo built is shared within a pass only
+        if (i > 1 || !firstAttempt) graft.pipeline.Memo.clear()
         pass()
       }
     def skewOf(ps: Seq[Seq[(String, Double)]]): Double = {

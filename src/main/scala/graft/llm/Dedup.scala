@@ -547,10 +547,9 @@ object Dedup {
 
   /** [[minhashMd5Pairs]], materialized via localCheckpoint with the
     * internal shingle cache released before returning. The lazy variant
-    * persists a shingle frame whose only reclamation path is a global
-    * `spark.catalog.clearCache()` (the frame is internal, so the caller
-    * holds no handle to unpersist) - long sessions that call it
-    * repeatedly accumulate cached shingle partitions. Use this variant
+    * persists a shingle frame the caller holds no handle to, so it
+    * lives until a registry query's scope ends ([[graft.Scope]]) or the
+    * session stops. Use this variant
     * when the pair list will be consumed more than once (the registry's
     * session memo does): the eager checkpoint pins ONLY the O(pairs)
     * result, and the O(corpus) shingle blocks are freed immediately. */
@@ -573,9 +572,10 @@ object Dedup {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val rows = k / bands
     // persisted: three consumers (signature build + both verify joins)
-    // would each re-run the scan and shingle pass otherwise. Lifecycle
-    // is the caller's, as in [[removeBoilerplateChunks]] - prefer
-    // [[minhashMd5PairsCheckpointed]] when the result outlives the call.
+    // would each re-run the scan and shingle pass otherwise. Released
+    // with the registry query's scope, as in [[removeBoilerplateChunks]]
+    // - prefer [[minhashMd5PairsCheckpointed]] when the result outlives
+    // the call.
     val withSh = df.select(col(idCol).as("id"),
       shingles(col(textCol), shingleN).as("sh"))
       .persist()
@@ -676,7 +676,7 @@ object Dedup {
     // frame, and without the pin each side re-ran the bucket-size
     // window (Exchange+Sort+Window twice per pass, measured ~0.8 s at
     // sf0.1). Block-hash-sized rows (<= blockHashes per doc), same
-    // lifecycle as `sk` above - the caller/bench sweep releases it.
+    // lifecycle as `sk` above - the query's graft.Scope releases it.
     val blk = sk.select(col("id"),
       explode(slice(col("bk"), 1, blockHashes)).as("h"))
     val wH = Window.partitionBy(col("h"))
@@ -821,8 +821,7 @@ object Dedup {
     // persisted: three consumers (boilerplate count, anti-join rebuild,
     // map-side totals) would each re-run the regex tokenization
     // otherwise (MEMORY_AND_DISK - spills instead of recomputing).
-    // Cache lifecycle is the caller's: unpersist/clearCache between
-    // repeated runs in one session (the Bench harness does).
+    // A registry query releases the cache on exit (graft.Scope).
     val chunked = df.select(col(idCol), words.as("__w"))
       .withColumn("__chunks",
         when(size(col("__w")) > 0,
@@ -899,7 +898,7 @@ object Dedup {
     // the gram stream, and building it is the operator's dominant map
     // work (O(n) chars per position; measured ~0.7 s per extra pass at
     // sf0.1). O(total words) rows, MEMORY_AND_DISK - same lifecycle as
-    // the shingle frames (the caller/bench sweep releases it).
+    // the shingle frames (the query's graft.Scope releases it).
     val grams = gramPositions(df, n, idCol, textCol).persist()
     val repeated = grams.groupBy(col("gram"))
       .agg(countDistinct(col(idCol)).as("gram_df"))

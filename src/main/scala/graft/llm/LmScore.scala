@@ -75,7 +75,7 @@ object LmScore {
     // uni three (the stats broadcast, first, cond) - unpersisted, every
     // broadcast build and branch replayed the scan+normalize (toks) or
     // the full unigram aggregation (uni). toks is O(docs) rows with the
-    // word arrays, uni vocab-sized; caller-sweep lifecycle.
+    // word arrays, uni vocab-sized; released by the query's graft.Scope.
     val toks = tokenized(df, idCol, textCol).persist()
 
     val uni = toks.select(explode(col("ws")).as("w"))
@@ -251,7 +251,7 @@ object LmScore {
     // source) but their upstream is the full per-doc bigram-LM scoring
     // pass - unpersisted, the grand-total branch, the tilt-sum branch
     // and the final projection each replayed it (4 evaluations
-    // measured). Model-sized cache, caller-sweep lifecycle.
+    // measured). Model-sized cache, released by the query's graft.Scope.
     val bySrc = df.select(col(idCol), col(strataCol))
       .join(perDoc, Seq(idCol))
       .groupBy(col(strataCol))

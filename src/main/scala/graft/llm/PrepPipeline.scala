@@ -38,9 +38,8 @@ object PrepPipeline {
     // inlines the producer per reference, turning 3 regex passes into
     // ~45 per row. Materializing once is the same stage barrier a
     // production run gets from writing the scrubbed corpus out
-    // (measured 6.0s -> 1.85s at sf0.1). Cache lifecycle is the
-    // caller's: repeated invocations in one long session should
-    // unpersist/clearCache between runs (the Bench harness does).
+    // (measured 6.0s -> 1.85s at sf0.1). The cache lives as long as
+    // the session; a registry query releases it on exit (graft.Scope).
     val scrubbed = TextAnalysis.withScrubbedText(docs).persist()
     val filtered = TextAnalysis
       .withQualityFilter(scrubbed, "scrubbed", thresholds)

@@ -38,10 +38,10 @@ import org.apache.spark.sql.functions._
   * eviction. Release paths, in preference order: (1) the pipeline
   * pattern - consume the key product at a phase boundary inside
   * ShardedPrefixSum.withExemptScope, which releases the pin on scope
-  * exit (sequential runs hold O(1) pins); (2) a sweep
-  * (ShardedPrefixSum.releaseAll - do not sweep between composing a
-  * key-bearing plan and consuming it; a sweep that drops a
-  * never-materialized pin warns and counts); (3) session stop.
+  * exit (sequential runs hold O(1) pins); (2) the end of a registry
+  * query's graft.Scope (ShardedPrefixSum.releaseAll - consume a
+  * key-bearing plan inside the query that composed it; a release that
+  * drops a never-materialized pin warns and counts); (3) session stop.
   */
 object Keys {
 

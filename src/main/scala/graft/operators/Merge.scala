@@ -101,7 +101,8 @@ object Merge {
     * caller's exempt-pin scope can release it on return. The default
     * identity keeps the fully lazy operator semantics for direct
     * callers (specs, the registry's q_m1_reconcile) - their pin lives
-    * until a sweep, consumed within the same query by construction. */
+    * until the query's graft.Scope ends, consumed within the same query
+    * by construction. */
   def reconcile(incoming: DataFrame, state: DataFrame, genes: DataFrame,
                 runTs: java.sql.Timestamp, speciesTypeKey: Int,
                 rgdIds: Option[DataFrame] = None,

@@ -47,13 +47,14 @@ object ShardedPrefixSum {
     *  - [[withExemptScope]] - the pipeline runs wrap each unit of work
     *    that CONSUMES its key products in-scope (a phase-boundary
     *    write), so sequential runs hold O(1) live pins;
-    *  - [[releaseAll]] (sweeps) or session stop (registerPin cleanup).
+    *  - [[releaseAll]] (every [[graft.Scope]] exit) or session stop
+    *    (registerPin cleanup).
     * Releasing an exempt pin whose product was never materialized
     * re-opens the dual-range-exchange nondeterminism for plans compiled
     * later; every release path checks the CacheManager's loaded flag
     * and counts + warns on such drops ([[unmaterializedReleases]]) so
-    * a sweep running between plan composition and consumption is a
-    * loud, machine-visible event instead of a prose caveat. */
+    * a release between plan composition and consumption is a loud,
+    * machine-visible event instead of a prose caveat. */
   private final class Pin(val df: DataFrame, val owner: Thread)
   private val pins = new java.util.ArrayDeque[Pin]()
   private val exemptPins = new java.util.ArrayDeque[Pin]()
@@ -63,7 +64,7 @@ object ShardedPrefixSum {
   def pinnedCount: Int = pins.synchronized { pins.size + exemptPins.size }
 
   /** Exempt pins released before their product was ever materialized
-    * (cumulative, JVM-wide). A nonzero delta across a sweep means some
+    * (cumulative, JVM-wide). A nonzero delta across a release means some
     * plan composed against a pinned single-partitioner exchange will
     * compile WITHOUT the pin - the r13 nondeterminism reopened by
     * lifecycle. Specs assert this stays flat across the pipeline
@@ -73,10 +74,11 @@ object ShardedPrefixSum {
   def unmaterializedReleases: Int = unmatReleases.get
 
   /** Unpersist and drop every registered pin, exempt ones included.
-    * Safe at session teardown / between bench passes for EXECUTED
-    * products (cached blocks recompute through their already-bound
-    * shuffle dependency); plans first COMPILED after a release re-plan
-    * the exchange per consumer - see the exempt-pin note above. */
+    * [[graft.Scope]] calls it when a registry query ends. Safe for
+    * EXECUTED products (cached blocks recompute through their
+    * already-bound shuffle dependency); plans first COMPILED after a
+    * release re-plan the exchange per consumer - see the exempt-pin
+    * note above. */
   def releaseAll(): Unit = pins.synchronized {
     while (!pins.isEmpty) safeUnpersist(pins.pollFirst().df)
     while (!exemptPins.isEmpty) releaseExempt(exemptPins.pollFirst())
@@ -119,7 +121,7 @@ object ShardedPrefixSum {
       System.err.println("[graft.pfx] WARN: cap-exempt pin released " +
         "before its key product was ever materialized - downstream " +
         "plans compiled from here lose the single-partitioner " +
-        "guarantee (consume the product before the sweep/scope exit)")
+        "guarantee (consume the product before the scope exit)")
     }
     safeUnpersist(p.df)
   }
@@ -139,7 +141,7 @@ object ShardedPrefixSum {
 
   private def safeUnpersist(df: DataFrame): Unit =
     // the frame may belong to a stopped session (test suites) or have
-    // been swept already (Bench's trim) - double-release is a no-op
+    // been released already - double-release is a no-op
     try df.unpersist(blocking = false) catch { case _: Throwable => () }
 
   private def sessionStopped(df: DataFrame): Boolean =
@@ -233,9 +235,9 @@ object ShardedPrefixSum {
     // SAME dependency and partitioner - cluster-safe. Lifecycle: the
     // cache entry is consumed within the building query and released
     // by the bounded pin registry (the cap-th subsequent cumBefore
-    // call unpersists it - see the public docstring); sweeps (Bench's
-    // trim, releaseAll) reclaim earlier, and a post-sweep
-    // recompilation re-registers it.
+    // call unpersists it - see the public docstring); a registry
+    // query's scope (graft.Scope, via releaseAll) releases it when the
+    // query ends, and a later recompilation re-registers it.
     val ranged = df
       .repartitionByRange(shards, (strataCol +: orderCols).map(col): _*)
       .withColumn("__pfx_shard", spark_partition_id())

@@ -3,6 +3,7 @@ package graft.pipeline
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
+import graft.Scope
 
 /** Session-scoped memo for flagship pipeline results.
   *
@@ -23,27 +24,49 @@ import org.apache.spark.sql.SparkSession
   * single slot, a new session's first call drops the previous session's
   * entries; at most one (possibly dead) session's memo is ever
   * retained. Two live sessions alternating would thrash the memo -
-  * acceptable: every harness (Verify, Bench, Smoke) runs one session.
+  * acceptable: every harness runs one session.
   *
-  * The cached DataFrames' plans are rooted at localCheckpoint RDDs, so
-  * a cached entry MUST NOT be used after those RDDs are unpersisted -
-  * callers that unpersist (Bench between passes) must `clear()` first.
+  * Ownership: the memo owns what its builds made persistent (the
+  * minhash-pairs localCheckpoint, cache entries the flagship run left),
+  * so a [[graft.Scope]] leaves it alone and the memoized plans, rooted at
+  * those RDDs, stay runnable across queries. [[clear]] drops the slot and
+  * then releases them. Prefix-sum pins stay the pin registry's: every
+  * scope releases them, also those a build made. A previous session's
+  * RDDs dropped with its slot are not unpersisted here; they go when
+  * that session stops or the context cleaner reaches them.
   */
 object Memo {
-  private var slot: (java.lang.ref.WeakReference[SparkSession], TrieMap[String, Any]) = null
+  private final class Slot(val session: java.lang.ref.WeakReference[SparkSession]) {
+    val values = TrieMap.empty[String, Any]
+    var owned: Scope.Held = Scope.Held.empty
+  }
+  private var slot: Slot = null
 
   def once[T](spark: SparkSession, key: String)(build: => T): T = synchronized {
-    val perSession =
-      if (slot != null && (slot._1.get eq spark)) slot._2
-      else {
-        val m = TrieMap.empty[String, Any]
-        slot = (new java.lang.ref.WeakReference(spark), m)
-        m
-      }
-    perSession.getOrElseUpdate(key, build).asInstanceOf[T]
+    if (slot == null || !(slot.session.get eq spark))
+      slot = new Slot(new java.lang.ref.WeakReference(spark))
+    val s = slot
+    s.values.getOrElse(key, {
+      val before = Scope.held(spark)
+      val v = build
+      s.owned = s.owned ++ (Scope.held(spark) -- before)
+      s.values.put(key, v)
+      v
+    }).asInstanceOf[T]
   }
 
-  /** Drop all cached results (does not unpersist the underlying RDDs -
-    * the caller owns that, e.g. via `sc.getPersistentRDDs`). */
-  def clear(): Unit = synchronized { slot = null }
+  /** What the current memo of `spark` owns. */
+  private[graft] def owned(spark: SparkSession): Scope.Held = synchronized {
+    if (slot != null && (slot.session.get eq spark)) slot.owned
+    else Scope.Held.empty
+  }
+
+  /** Drops every memoized result, then releases what their builds made
+    * persistent. */
+  def clear(): Unit = {
+    val old = synchronized { val s = slot; slot = null; s }
+    if (old != null) Option(old.session.get)
+      .filterNot(_.sparkContext.isStopped)
+      .foreach(Scope.release(_, old.owned))
+  }
 }

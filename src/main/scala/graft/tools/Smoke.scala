@@ -5,6 +5,7 @@ package graft.tools
   * queries/oracleSql registries for orphans. */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    val only = graft.registry.Registry.only()
     val spark = graft.LocalSession("graft-smoke")
 
     val df = graft.SparkEntry.entry(spark)
@@ -44,22 +45,18 @@ object Smoke {
       .count()
     println(s"NULL_EMBEDDING_ANN_QUERIES=$nullAnnQueries")
 
-    var failed = 0
     var planBad = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, dir)
-        badJoins(df.queryExecution.sparkPlan, name).foreach { msg =>
-          planBad += 1
-          println(s"PLAN_VIOLATION $msg")
-        }
-        df.write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        failed += 1
-        println(s"QUERY_FAILED $name: ${e.getMessage}")
+    val runs = graft.Scope.registry(spark, dir, only) {
+      (name, e) => println(s"QUERY_FAILED $name: ${e.getMessage}")
+    } { (name, df) =>
+      badJoins(df.queryExecution.sparkPlan, name).foreach { msg =>
+        planBad += 1
+        println(s"PLAN_VIOLATION $msg")
       }
+      df.write.format("noop").mode("overwrite").save()
     }
-    println(s"QUERIES_OK=${graft.SparkEntry.queries.size - failed} FAILED=$failed")
+    val failed = runs.count(_.failed)
+    println(s"QUERIES_OK=${runs.size - failed} FAILED=$failed")
     println(s"PLAN_VIOLATIONS=$planBad")
     spark.stop()
     if (failed > 0 || planBad > 0 || nonPrintable > 0 ||
