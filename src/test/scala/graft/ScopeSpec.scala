@@ -90,9 +90,11 @@ class ScopeSpec extends SparkSpec {
   test("a query whose plan throws at execution leaves nothing behind and " +
     "is reported failed") {
     val boom = Q("q_boom", (s, _) => {
+      // the persist under test stands apart from the pinned frame:
+      // releasing a pin can drop its input's cache entry with it
+      s.range(50).toDF("z").persist().count()
       val base = s.range(200).toDF("id")
-        .withColumn("g", col("id") % 3).withColumn("tok", lit(1L)).persist()
-      base.count()
+        .withColumn("g", col("id") % 3).withColumn("tok", lit(1L))
       base.createOrReplaceTempView("boom_view")
       ShardedPrefixSum.cumBefore(base, "tok", "g", "id", 2, "off")
         .withColumn("x", when(col("id") === 150, raise_error(lit("boom")))
