@@ -11,14 +11,17 @@ import graft.registry.{Q, Registry}
   *
   * [[Scope.apply]] runs one query, from building its plan to its sink
   * write, and on exit releases everything the query left in the session:
-  *   - prefix-sum pins ([[ShardedPrefixSum.releaseAll]]);
+  *   - prefix-sum pins: the query runs inside a
+  *     [[ShardedPrefixSum.scoped]] call, which owns every pin made on
+  *     this thread outside a pipeline's own scope;
   *   - Dataset cache entries and RDDs that became persistent during the
   *     query (operator persists, localCheckpoints), unpersisted with
   *     `blocking = true`;
   *   - temp views it created (the streaming queries' memory sinks).
   *
   * The one exception is what the memo owns: what a [[Memo.once]] build
-  * made persistent outlives the scope and is released by [[Memo.clear]].
+  * made persistent, pins aside, outlives the scope and is released by
+  * [[Memo.clear]].
   * So a query's cost depends on its own plan and on the memo, never on
   * what its neighbours left behind.
   *
@@ -39,6 +42,10 @@ object Scope {
       entries.filterNot(e => o.entries.exists(_ eq e)), views -- o.views)
     def ++(o: Held): Held = Held(rdds ++ o.rdds,
       entries ++ (o -- this).entries, views ++ o.views)
+    def size: Int = rdds.size + entries.size + views.size
+    /** The prefix-sum pins among the cache entries. */
+    def pins: Seq[CachedData] =
+      entries.filter(_.plan.output.exists(_.name == "__pfx_shard"))
   }
 
   private[graft] object Held {
@@ -64,10 +71,12 @@ object Scope {
   }
 
   /** Drops `h`'s temp views, uncaches its cache entries and unpersists its
-    * RDDs, each blocking until the blocks are gone. */
+    * RDDs, each blocking until the blocks are gone. The views go through
+    * the session catalog: `Catalog.dropTempView` would also uncache the
+    * view's plan, which may be a frame the caller persisted. */
   private[graft] def release(spark: SparkSession, h: Held): Unit = {
     val s = classic(spark)
-    h.views.foreach(s.catalog.dropTempView)
+    h.views.foreach(s.sessionState.catalog.dropTempView)
     h.entries.foreach(e => s.sharedState.cacheManager.uncacheQuery(
       s, e.plan, cascade = false, blocking = true))
     h.rdds.values.foreach(_.unpersist(blocking = true))
@@ -77,13 +86,12 @@ object Scope {
     * owns. */
   def apply[T](spark: SparkSession)(body: => T): T = {
     val before = held(spark)
-    try body
-    finally {
-      val left = held(spark) -- before -- Memo.owned(spark)
-      // the pins' RDDs are in `left`, so their release below blocks too
-      ShardedPrefixSum.releaseAll()
-      release(spark, left)
-    }
+    var left = Held.empty
+    try ShardedPrefixSum.scoped {
+      // taken while the pins are still cached, so that the release
+      // below blocks on their blocks too
+      try body finally left = held(spark) -- before -- Memo.owned(spark)
+    } finally release(spark, left)
   }
 
   /** One query's run: seconds from building its plan to the end of its

@@ -30,18 +30,15 @@ import org.apache.spark.sql.functions._
   * formulation this replaced).
   *
   * Pin lifecycle: the prefix sum pins the FULL input frame
-  * (MEMORY_AND_DISK; project before calling when the row is wide) as a
-  * CAP-EXEMPT entry in the ShardedPrefixSum registry - key products
-  * are routinely handed to callers for arbitrarily late compilation,
-  * and a FIFO-evicted pin would silently re-open the
-  * dual-range-exchange nondeterminism for plans compiled after
-  * eviction. Release paths, in preference order: (1) the pipeline
-  * pattern - consume the key product at a phase boundary inside
-  * ShardedPrefixSum.withExemptScope, which releases the pin on scope
-  * exit (sequential runs hold O(1) pins); (2) the end of a registry
-  * query's graft.Scope (ShardedPrefixSum.releaseAll - consume a
-  * key-bearing plan inside the query that composed it; a release that
-  * drops a never-materialized pin warns and counts); (3) session stop.
+  * (MEMORY_AND_DISK; project before calling when the row is wide), and
+  * the pin follows ShardedPrefixSum's one rule - the innermost open
+  * ShardedPrefixSum.scoped call releases it on exit, never earlier, so
+  * a key product compiled late inside that scope still reads its pin.
+  * The pipeline runs consume each key product at a phase boundary
+  * inside their own scope (sequential runs hold no pins between runs);
+  * a registry query's graft.Scope opens one around the whole query.
+  * A release that drops a never-materialized pin warns and counts.
+  * With no scope open the pin is an ordinary persist the caller owns.
   */
 object Keys {
 
@@ -76,7 +73,7 @@ object Keys {
     }.withColumn("__seq_tok", lit(1L)).withColumn("__seq_strat", lit(1))
     ShardedPrefixSum
       .cumBefore(withOrd, "__seq_tok", "__seq_strat", ordNames,
-        numShards = 0, "__seq_rank", capExemptPin = true)
+        numShards = 0, "__seq_rank")
       .withColumn(keyCol, base + col("__seq_rank") + lit(1L))
       .drop("__seq_tok" +: "__seq_strat" +: "__seq_rank" +: ordNames: _*)
   }

@@ -98,11 +98,12 @@ object Merge {
     * inserted audit and the post-merge state read the SAME materialized
     * keys instead of each recomputing the key join, and (b) CONSUMES
     * the surrogate-key pin (see operators.Keys) inside the run, so the
-    * caller's exempt-pin scope can release it on return. The default
-    * identity keeps the fully lazy operator semantics for direct
-    * callers (specs, the registry's q_m1_reconcile) - their pin lives
-    * until the query's graft.Scope ends, consumed within the same query
-    * by construction. */
+    * caller's pin scope (ShardedPrefixSum.scoped) can release it on
+    * return. The default identity keeps the fully lazy operator
+    * semantics for direct callers (specs, the registry's q_m1_reconcile)
+    * - their pin lives until the innermost open pin scope exits (for a
+    * registry query, its graft.Scope), consumed within it by
+    * construction. */
   def reconcile(incoming: DataFrame, state: DataFrame, genes: DataFrame,
                 runTs: java.sql.Timestamp, speciesTypeKey: Int,
                 rgdIds: Option[DataFrame] = None,
@@ -231,7 +232,7 @@ object Merge {
       .select(state.columns.toIndexedSeq.map(col): _*))
     // no persist here: under the identity hook the key assignment above
     // already pins the full insert frame (Keys -> ShardedPrefixSum
-    // cap-exempt pin), so both consumers (newState union + the inserted
+    // pin), so both consumers (newState union + the inserted
     // audit) recompute only the cheap post-pin window/offset join - a
     // second cache entry would hold the same rows twice. Under a
     // materializing hook both consumers read the written delta and the

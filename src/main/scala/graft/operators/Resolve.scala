@@ -99,7 +99,10 @@ object Resolve {
       .union(relations.select(col("destOtherId").as("egId")))
     // the map is probed for both relation sides, and the joined frame
     // feeds both the audit and the resolved output: persist the shared
-    // nodes so one resolution pass serves all consumers (lazy)
+    // nodes so one resolution pass serves all consumers (lazy). Not
+    // released by the run on purpose: a later run over the same
+    // relations and dimension tables (the `--species` reload) reads this
+    // entry - see the note at Grouping.withComplementaryRelations.
     val egMap = resolutionMap(ids, xrefs, genes, rgdIds, history).persist()
 
     val srcMap = egMap.select(

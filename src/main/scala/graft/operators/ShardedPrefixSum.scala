@@ -3,10 +3,12 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
 /** Distributed exact running sums: the TWO-LEVEL shard prefix sum used
-  * by sequence packing ([[graft.llm.Packing]]) and the distributed
-  * column profile ([[Profile.summarizeDistributed]]).
+  * by sequence packing ([[graft.llm.Packing]]), token-budget splits
+  * ([[graft.llm.Splitting]]), surrogate keys ([[Keys]]) and the
+  * distributed column profile ([[Profile.summarizeDistributed]]).
   *
   * A naive `sum(x) OVER (PARTITION BY stratum ORDER BY ord)`
   * materializes each stratum in one WindowExec task - a hot stratum
@@ -22,113 +24,64 @@ import org.apache.spark.sql.functions._
   * invariant to where the range boundaries fall, so AQE coalescing and
   * sampling-determined splits cannot change it. Integer-only
   * arithmetic, bit-stable across engines and re-runs.
+  *
+  * Each call pins (persists) its range-partitioned input so that both
+  * of its consumers read one sampled partitioner. One rule says who
+  * releases a pin: the innermost [[scoped]] call open on the making
+  * thread, when it exits; with no scope open, the caller.
   */
 object ShardedPrefixSum {
 
-  /** Cap on live cap-counted pins. */
-  private val MaxPinned = 8
+  /** The pins of each [[scoped]] call open on this thread, innermost
+    * first. */
+  private val open = new ThreadLocal[List[ArrayBuffer[DataFrame]]] {
+    override def initialValue(): List[ArrayBuffer[DataFrame]] = Nil
+  }
 
-  /** Live pinned materializations, oldest first. Every [[cumBefore]]
-    * call persists its ranged frame (the correctness pin - see the
-    * body comment) and registers it here; the registry caps live
-    * CAP-COUNTED pins at [[MaxPinned]] by
-    * unpersisting the oldest, so a long-lived session issuing many
-    * distinct packing/profile queries holds O(1) pinned entries
-    * instead of leaking one session-lifetime cache entry per call.
-    *
-    * CAP-EXEMPT pins (capExemptPin = true) are never FIFO-evicted:
-    * a pin evicted BEFORE a downstream plan is compiled removes the
-    * CacheManager entry, so that later compilation plans the ranged
-    * subtree twice and loses the single-sampled-partitioner guarantee
-    * - the r13 bug reopened by lifecycle. Callers that hand their
-    * product to third parties for ARBITRARILY LATE compilation
-    * (Keys.assignSequential inside a lazily-consumed pipeline Result)
-    * register exempt. Exempt pins are released by
-    *  - [[withExemptScope]] - the pipeline runs wrap each unit of work
-    *    that CONSUMES its key products in-scope (a phase-boundary
-    *    write), so sequential runs hold O(1) live pins;
-    *  - [[releaseAll]] (every [[graft.Scope]] exit) or session stop
-    *    (registerPin cleanup).
-    * Releasing an exempt pin whose product was never materialized
-    * re-opens the dual-range-exchange nondeterminism for plans compiled
-    * later; every release path checks the CacheManager's loaded flag
-    * and counts + warns on such drops ([[unmaterializedReleases]]) so
-    * a release between plan composition and consumption is a loud,
-    * machine-visible event instead of a prose caveat. */
-  private final class Pin(val df: DataFrame, val owner: Thread)
-  private val pins = new java.util.ArrayDeque[Pin]()
-  private val exemptPins = new java.util.ArrayDeque[Pin]()
-
-  /** Number of currently registered pins, cap-counted + exempt
-    * (introspection for specs and cache-pressure monitoring). */
-  def pinnedCount: Int = pins.synchronized { pins.size + exemptPins.size }
-
-  /** Exempt pins released before their product was ever materialized
-    * (cumulative, JVM-wide). A nonzero delta across a release means some
-    * plan composed against a pinned single-partitioner exchange will
-    * compile WITHOUT the pin - the r13 nondeterminism reopened by
-    * lifecycle. Specs assert this stays flat across the pipeline
-    * flows; operators keep it flat by consuming key products (a phase
-    * write) inside the scope that releases them. */
+  /** Pins released before anything executed through them (cumulative,
+    * JVM-wide). A nonzero delta across a scope means some plan composed
+    * against a pinned single-partitioner exchange will compile WITHOUT
+    * the pin - the r13 nondeterminism reopened by lifecycle. Specs
+    * assert this stays flat across the pipeline flows; callers keep it
+    * flat by consuming what they compose (a phase write, a sink write)
+    * inside the scope that owns its pins. */
   private val unmatReleases = new java.util.concurrent.atomic.AtomicInteger(0)
   def unmaterializedReleases: Int = unmatReleases.get
 
-  /** Unpersist and drop every registered pin, exempt ones included.
-    * [[graft.Scope]] calls it when a registry query ends. Safe for
-    * EXECUTED products (cached blocks recompute through their
-    * already-bound shuffle dependency); plans first COMPILED after a
-    * release re-plan the exchange per consumer - see the exempt-pin
-    * note above. */
-  def releaseAll(): Unit = pins.synchronized {
-    while (!pins.isEmpty) safeUnpersist(pins.pollFirst().df)
-    while (!exemptPins.isEmpty) releaseExempt(exemptPins.pollFirst())
-  }
-
-  /** Run `body`; afterwards release every CAP-EXEMPT pin the CURRENT
-    * thread registered during it. The contract callers must uphold:
-    * everything compiled against those pins is EXECUTED inside the
-    * scope (the pipeline runs materialize each key product at a phase
-    * boundary before returning), so by scope exit the pin has done its
-    * single-partitioner job and the cache entry can go. A pin released
-    * here that was never materialized trips the
-    * [[unmaterializedReleases]] counter + stderr warning - the signal
-    * that a composed-but-unconsumed key product just lost its
-    * guarantee. Thread-scoped on purpose: concurrent sessions (or a
-    * streaming query thread) cannot have their pins swept by another
-    * thread's scope. Nests safely - an inner scope releases only its
-    * own additions. */
-  def withExemptScope[T](body: => T): T = {
-    val me = Thread.currentThread()
-    val before = pins.synchronized {
-      val s = java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[Pin, java.lang.Boolean]())
-      exemptPins.forEach { p => if (p.owner eq me) { s.add(p); () } }
-      s
-    }
+  /** Runs `body`; every pin [[cumBefore]] makes while this is the
+    * innermost scope open on the current thread belongs to it and is
+    * unpersisted (non-blocking) when it exits, never earlier. The
+    * contract callers uphold: everything compiled against those pins is
+    * EXECUTED inside the scope (the pipeline runs write each key product
+    * at a phase boundary, a registry query writes its sink), so by exit
+    * the pin has done its single-partitioner job. A pin released
+    * unmaterialized counts in [[unmaterializedReleases]] and warns.
+    * Scopes nest; an outer scope never releases an inner one's pins. */
+  def scoped[T](body: => T): T = {
+    val outer = open.get
+    val mine = ArrayBuffer.empty[DataFrame]
+    open.set(mine :: outer)
     try body
-    finally pins.synchronized {
-      exemptPins.removeIf { p =>
-        val mine = (p.owner eq me) && !before.contains(p)
-        if (mine) releaseExempt(p)
-        mine
+    finally {
+      open.set(outer)
+      // checked before any release: two pins of one plan share an entry
+      val unused = mine.count(p => !sessionStopped(p) && !materialized(p))
+      if (unused > 0) {
+        unmatReleases.addAndGet(unused)
+        System.err.println(s"[graft.pfx] WARN: $unused prefix-sum pin(s) " +
+          "released before their product was ever materialized - " +
+          "downstream plans compiled from here lose the " +
+          "single-partitioner guarantee (consume the product before the " +
+          "scope exits)")
       }
+      // a stopped session (test suites) has nothing left to release
+      mine.foreach(p => try p.unpersist(blocking = false) catch { case _: Throwable => () })
     }
-  }
-
-  private def releaseExempt(p: Pin): Unit = {
-    if (!sessionStopped(p.df) && !materialized(p.df)) {
-      unmatReleases.incrementAndGet()
-      System.err.println("[graft.pfx] WARN: cap-exempt pin released " +
-        "before its key product was ever materialized - downstream " +
-        "plans compiled from here lose the single-partitioner " +
-        "guarantee (consume the product before the scope exit)")
-    }
-    safeUnpersist(p.df)
   }
 
   /** Whether the pinned frame's cached column buffers were ever built,
     * i.e. some consumer executed through the pin. Reads the session
-    * CacheManager's loaded flag; a missing entry (already unpersisted,
+    * CacheManager's loaded flag; a missing entry (already uncached,
     * stopped session) reports false. */
   private def materialized(df: DataFrame): Boolean =
     try {
@@ -139,29 +92,8 @@ object ShardedPrefixSum {
         .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
     } catch { case _: Throwable => false }
 
-  private def safeUnpersist(df: DataFrame): Unit =
-    // the frame may belong to a stopped session (test suites) or have
-    // been released already - double-release is a no-op
-    try df.unpersist(blocking = false) catch { case _: Throwable => () }
-
   private def sessionStopped(df: DataFrame): Boolean =
     try df.sparkSession.sparkContext.isStopped catch { case _: Throwable => true }
-
-  private def registerPin(df: DataFrame, capExempt: Boolean): Unit = {
-    pins.synchronized {
-      // drop pins stranded by stopped sessions (sequential test
-      // suites): they hold the dead session's plans and state
-      // reachable from this JVM-global registry otherwise
-      pins.removeIf(p => { val s = sessionStopped(p.df); if (s) safeUnpersist(p.df); s })
-      exemptPins.removeIf(p => { val s = sessionStopped(p.df); if (s) safeUnpersist(p.df); s })
-      val pin = new Pin(df, Thread.currentThread())
-      if (capExempt) exemptPins.addLast(pin)
-      else {
-        pins.addLast(pin)
-        while (pins.size > MaxPinned) safeUnpersist(pins.pollFirst().df)
-      }
-    }
-  }
 
   /** Adds `outCol` = sum of `tokenCol` over rows of the same stratum
     * that precede this row in `orderCol` order (exclusive running
@@ -176,17 +108,11 @@ object ShardedPrefixSum {
     * (id, stratum, token, order), not the full corpus row - every
     * column in `df` is cached for the duration of the query.
     *
-    * Pin lifecycle: the persisted frame is registered in a bounded
-    * FIFO ([[pinnedCount]], cap [[MaxPinned]]); the
-    * 9th subsequent call unpersists this one. The single-partitioner
-    * guarantee covers every execution COMPILED while the pin is live -
-    * an evicted pin's cached blocks recompute through the same already
-    * -sampled ShuffleDependency, so running plans stay exact - but a
-    * FRESH compilation of a product older than `MaxPinned` later calls
-    * would re-plan the exchange per consumer and lose the guarantee.
-    * Consume each product (as every library caller does, immediately)
-    * before issuing `MaxPinned` further prefix sums. [[releaseAll]]
-    * drops everything. */
+    * Pin lifecycle: with a [[scoped]] call open on this thread, the
+    * persisted frame belongs to the innermost one and is unpersisted
+    * when it exits - consume the product inside that scope. With none
+    * open it is an ordinary persist the caller owns (the single-sampled
+    * partitioner then holds for as long as the caller keeps it). */
   def cumBefore(df: DataFrame, tokenCol: String,
                 strataCol: String, orderCol: String,
                 numShards: Int, outCol: String): DataFrame =
@@ -199,8 +125,7 @@ object ShardedPrefixSum {
     * descending component (keeps the single code path). */
   def cumBefore(df: DataFrame, tokenCol: String,
                 strataCol: String, orderCols: Seq[String],
-                numShards: Int, outCol: String,
-                capExemptPin: Boolean = false): DataFrame = {
+                numShards: Int, outCol: String): DataFrame = {
     require(orderCols.nonEmpty, "cumBefore needs at least one order column")
     val shards =
       if (numShards > 0) numShards
@@ -232,17 +157,13 @@ object ShardedPrefixSum {
     // localCheckpoint pin (which truncates lineage, so an executor
     // loss or dynamic-allocation decommission after materialization
     // kills the job), lost cache blocks here recompute through the
-    // SAME dependency and partitioner - cluster-safe. Lifecycle: the
-    // cache entry is consumed within the building query and released
-    // by the bounded pin registry (the cap-th subsequent cumBefore
-    // call unpersists it - see the public docstring); a registry
-    // query's scope (graft.Scope, via releaseAll) releases it when the
-    // query ends, and a later recompilation re-registers it.
+    // SAME dependency and partitioner - cluster-safe. Lifecycle: see
+    // the public docstring.
     val ranged = df
       .repartitionByRange(shards, (strataCol +: orderCols).map(col): _*)
       .withColumn("__pfx_shard", spark_partition_id())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerPin(ranged, capExemptPin)
+    open.get.headOption.foreach(_ += ranged)
     val wIn = Window
       .partitionBy(col(strataCol), col("__pfx_shard"))
       .orderBy(orderCols.map(col): _*)

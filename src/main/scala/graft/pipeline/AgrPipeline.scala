@@ -22,7 +22,7 @@ object AgrPipeline {
     * step hits directly). Computed ON FIRST ACCESS, same contract as
     * [[OrthologPipeline.Result.associations]]: the new bindings carry
     * surrogate keys whose assignment pins a shared range exchange, so
-    * the accessor phase-materializes them in its own exempt-pin scope -
+    * the accessor phase-materializes them in its own pin scope -
     * a caller that never reads xrefs (the benched pair queries) never
     * pays for the branch.
     *
@@ -59,7 +59,7 @@ object AgrPipeline {
     // the new-gene rgd-id keys pin a shared exchange until the
     // agr_resolved phase write below consumes them; the scope releases
     // the pin on return (O(1) live pins across sequential runs)
-    graft.operators.ShardedPrefixSum.withExemptScope {
+    graft.operators.ShardedPrefixSum.scoped {
       runBody(lines, agrState, xrefs, genes, rgdIds, runTs, cutoff,
         deleteThreshold, maxExistingRgdId, phases)
     }
@@ -147,12 +147,12 @@ object AgrPipeline {
     // directly. Distinct on (rgdId, accId): the reference re-inserts
     // per line occurrence, which is set-wise one binding. Surrogate
     // accXdbKeys above the current max; the accessor's phase write
-    // consumes the key pin inside its own exempt scope. QC: touch seen
+    // consumes the key pin inside its own pin scope. QC: touch seen
     // AGR_GENE xrefs, sweep stale ones; the newly inserted bindings
     // carry runTs and ride through un-swept.
     val seen = resolved.filter(col("rgdId").isNotNull).select(col("curie"))
     def newXrefs(): DataFrame =
-      graft.operators.ShardedPrefixSum.withExemptScope {
+      graft.operators.ShardedPrefixSum.scoped {
         val newXrefRows = phases("agr_new_xrefs", Seq("accXdbKey"),
           Keys.assignSequentialFrom(
             resolved.filter(col("how").isin("specialId", "symbol", "insert"))

@@ -30,8 +30,10 @@ import graft.Scope
   * minhash-pairs localCheckpoint, cache entries the flagship run left),
   * so a [[graft.Scope]] leaves it alone and the memoized plans, rooted at
   * those RDDs, stay runnable across queries. [[clear]] drops the slot and
-  * then releases them. Prefix-sum pins stay the pin registry's: every
-  * scope releases them, also those a build made. A previous session's
+  * then releases them. Prefix-sum pins are the exception: a pin belongs
+  * to the innermost open pin scope (ShardedPrefixSum.scoped), so one a
+  * build made goes when that scope exits - at the latest, at the end of
+  * the query's [[graft.Scope]]. A previous session's
   * RDDs dropped with its slot are not unpersisted here; they go when
   * that session stops or the context cleaner reaches them.
   */

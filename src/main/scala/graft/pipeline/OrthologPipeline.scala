@@ -35,7 +35,7 @@ object OrthologPipeline {
     * picks-only caller - the benched flagship projections - throws that
     * work away (guide "don't compute things you throw away"). The first
     * access of ANY post-picks product runs those phases once, through
-    * the run's PhaseStore, inside their own exempt-pin scope: the
+    * the run's PhaseStore, inside their own pin scope: the
     * reconcile's surrogate-key pin is consumed by its own phase write
     * and released on scope exit, so no pin outlives the access
     * (PinLifecycleSpec). [[associations]] additionally defers its own
@@ -103,7 +103,7 @@ object OrthologPipeline {
     // phase-boundary writes (the reconcile insert delta below); the
     // scope releases them on return, so N sequential runs hold O(1)
     // live pins with no caller sweeps (ShardedPrefixSum scaladoc)
-    graft.operators.ShardedPrefixSum.withExemptScope {
+    graft.operators.ShardedPrefixSum.scoped {
       runSpeciesBody(relations, state, speciesTypeKey, runTs,
         pipelineUserId, phases)
     }
@@ -134,11 +134,11 @@ object OrthologPipeline {
     // Everything below runs on FIRST ACCESS of a post-picks product
     // (Result scaladoc): the benched picks-only consumers never pay for
     // the reconcile/sync/repair phase writes. The block runs inside its
-    // own exempt-pin scope - the reconcile's surrogate-key pin is
+    // own pin scope - the reconcile's surrogate-key pin is
     // consumed by the "inserted" phase write and released on exit,
     // exactly as it was when the body ran eagerly inside runSpecies'
     // scope.
-    def restOfRun(): RestOfRun = graft.operators.ShardedPrefixSum.withExemptScope {
+    def restOfRun(): RestOfRun = graft.operators.ShardedPrefixSum.scoped {
 
     // M1/M2: reconcile picks with ortholog state; groupId rides along
     // onto inserted state rows (reference-bean parity)
@@ -149,7 +149,7 @@ object OrthologPipeline {
     // the insert delta materializes at its own phase boundary (the
     // hook): the inserted audit and merged state then read the SAME
     // stored keys, and the surrogate-key pin is consumed inside this
-    // run's exempt-pin scope (released on return)
+    // run's pin scope (released on return)
     // the registry rides into the reconcile: the reference's per-group
     // state fetch is both-endpoints-ACTIVE (round-16 visibility pin)
     val m0 = Merge.reconcile(incoming, state.orthologs, state.genes,
@@ -191,7 +191,7 @@ object OrthologPipeline {
     // final association state = state - deletes + updates + inserts (+ repairs).
     // Deferred to first access (Result scaladoc): the insert keys pin a
     // shared exchange during materialization, so the accessor phase-
-    // writes the new state in its own exempt-pin scope and hands back
+    // writes the new state in its own pin scope and hands back
     // the store-backed read - no pin outlives the access, and callers
     // that never read associations never build this branch.
     val repairInserts = rep1.assocInserts
@@ -200,7 +200,7 @@ object OrthologPipeline {
       .join(finalDeletes.select(col("assocKey")), Seq("assocKey"), "left_anti")
       .join(sync.updates.select(col("assocKey")), Seq("assocKey"), "left_anti")
     def newAssociations(): DataFrame =
-      graft.operators.ShardedPrefixSum.withExemptScope {
+      graft.operators.ShardedPrefixSum.scoped {
         phases("associations", Seq("assocKey"), untouchedAssocs
           .unionByName(
             sync.updates.select(untouchedAssocs.columns.toIndexedSeq.map(col): _*))
@@ -221,7 +221,7 @@ object OrthologPipeline {
         "w1Deleted" -> w1Deleted, "syncMatched" -> sync.matched,
         "syncUpdated" -> sync.updates, "syncInserted" -> sync.inserts,
         "syncDeleted" -> finalDeletes))
-    } // end restOfRun / its exempt-pin scope
+    } // end restOfRun / its pin scope
 
     new Result(
       restThunk = () => restOfRun(),

@@ -72,6 +72,12 @@ object Cli {
       if (i >= args.length) { System.err.println(s"ERROR: $flag needs a value"); None }
       else Some(args(i))
     }
+    def integer[N](flag: String)(parse: String => Option[N]): Option[N] =
+      value(flag).flatMap { v =>
+        val n = parse(v)
+        if (n.isEmpty) System.err.println(s"ERROR: $flag needs an integer")
+        n
+      }
     while (i < args.length) {
       args(i) match {
         case "--species" => speciesArg = value("--species"); if (speciesArg.isEmpty) return -1
@@ -79,14 +85,14 @@ object Cli {
         case "--agrOrthologs" => agrOrthologs = true
         case "--sfDir" => value("--sfDir") match { case Some(v) => sfDir = v; case None => return -1 }
         case "--out" => value("--out") match { case Some(v) => out = v; case None => return -1 }
-        case "--maxAgeDays" => value("--maxAgeDays") match { case Some(v) => maxAgeDays = v.toInt; case None => return -1 }
+        case "--maxAgeDays" => integer("--maxAgeDays")(_.toIntOption) match { case Some(v) => maxAgeDays = v; case None => return -1 }
         case "--hcop" => hcopPath = value("--hcop"); if (hcopPath.isEmpty) return -1
         case "--ncbi" => ncbiPath = value("--ncbi"); if (ncbiPath.isEmpty) return -1
         case "--alliance" => alliancePath = value("--alliance"); if (alliancePath.isEmpty) return -1
-        case "--sanityFloor" => value("--sanityFloor") match { case Some(v) => sanityFloor = v.toLong; case None => return -1 }
+        case "--sanityFloor" => integer("--sanityFloor")(_.toLongOption) match { case Some(v) => sanityFloor = v; case None => return -1 }
         case "--bpeSave" => bpeSaveDir = value("--bpeSave"); if (bpeSaveDir.isEmpty) return -1
         case "--bpeLoad" => bpeLoadDir = value("--bpeLoad"); if (bpeLoadDir.isEmpty) return -1
-        case "--bpeRounds" => value("--bpeRounds") match { case Some(v) => bpeRounds = v.toInt; case None => return -1 }
+        case "--bpeRounds" => integer("--bpeRounds")(_.toIntOption) match { case Some(v) => bpeRounds = v; case None => return -1 }
         case other => System.err.println(s"ERROR: unknown argument: $other"); return -1
       }
       i += 1

@@ -45,6 +45,13 @@ object Smoke {
       .count()
     println(s"NULL_EMBEDDING_ANN_QUERIES=$nullAnnQueries")
 
+    // what the session holds outside the memo must be the same after
+    // the registry loop as before it: every query's scope released what
+    // it made, and nothing it did not make
+    def held = graft.Scope.held(spark) -- graft.pipeline.Memo.owned(spark)
+    val held0 = held
+    val unmat0 = graft.operators.ShardedPrefixSum.unmaterializedReleases
+
     var planBad = 0
     val runs = graft.Scope.registry(spark, dir, only) {
       (name, e) => println(s"QUERY_FAILED $name: ${e.getMessage}")
@@ -58,9 +65,19 @@ object Smoke {
     val failed = runs.count(_.failed)
     println(s"QUERIES_OK=${runs.size - failed} FAILED=$failed")
     println(s"PLAN_VIOLATIONS=$planBad")
+    val held1 = held
+    val (added, dropped) = (held1 -- held0, held0 -- held1)
+    // pins added in the loop are counted in `added`
+    val left = added.size + dropped.size + (held1 -- added).pins.size
+    for ((what, h) <- Seq("added" -> added, "dropped" -> dropped); if h.size > 0)
+      println(s"SCOPE_LEFT_$what rdds=${h.rdds.keys.toSeq.sorted} views=${h.views} " +
+        "entries=" + h.entries.map(_.plan.output.map(_.name).mkString("(", ",", ")")))
+    println(s"SCOPE_LEFT=$left")
+    println("PIN_UNMATERIALIZED=" +
+      (graft.operators.ShardedPrefixSum.unmaterializedReleases - unmat0))
     spark.stop()
     if (failed > 0 || planBad > 0 || nonPrintable > 0 ||
-      nullAnnQueries > 0) sys.exit(1)
+      nullAnnQueries > 0 || left > 0) sys.exit(1)
   }
 
   /** Non-scalar BroadcastNestedLoopJoin / CartesianProduct findings in

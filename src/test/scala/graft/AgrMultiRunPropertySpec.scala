@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.operators.ShardedPrefixSum
 import graft.pipeline.AgrPipeline
 import graft.AgrRefModel.{AgrRow, GeneRow, Line, XrefRow}
 
@@ -161,7 +160,6 @@ class AgrMultiRunPropertySpec extends SparkSpec {
           .map(g => GeneRow(g._1, g._2, g._3, active = true))
         eXrefsDf = r.xrefs
         eStateDf = r.agrOrthologs
-        ShardedPrefixSum.releaseAll()
 
         if (i > 0) {
           val prevState = modelOuts(i - 1).finalState
@@ -218,7 +216,6 @@ class AgrMultiRunPropertySpec extends SparkSpec {
     val state1Df = r1.agrOrthologs
     assert(AgrMultiRunPropertySpec.collectAgr(state1Df)
       .map(s => (s.g1, s.g2)) == Set((2, 2)))
-    ShardedPrefixSum.releaseAll()
 
     // WITH the handoff: map hit, same gene id, no new gene
     val cWith = scala.collection.mutable.Map[String, Int]()
@@ -235,7 +232,6 @@ class AgrMultiRunPropertySpec extends SparkSpec {
     assert(with2 == m2.finalState)
     assert(with2.map(s => (s.g1, s.g2)) == Set((2, 2)),
       "run 2 must keep run 1's gene id via the persisted binding")
-    ShardedPrefixSum.releaseAll()
 
     // WITHOUT the handoff (original empty xrefs): the binding is gone,
     // the renamed symbol misses, the curie re-inserts as gene 3 - the
@@ -251,7 +247,6 @@ class AgrMultiRunPropertySpec extends SparkSpec {
     assert(without2.map(s => (s.g1, s.g2)) == Set((3, 3)),
       "without the binding the curie must re-insert under a fresh id")
     assert(without2 != with2, "the teeth: dropped write parity diverges")
-    ShardedPrefixSum.releaseAll()
   }
 }
 

@@ -112,8 +112,6 @@ class AgrPropertySpec extends SparkSpec {
       assert(r.resolutionStats.as[(Option[String], Long)].collect()
         .map { case (k, v) => k.orNull -> v }.toMap == exp.stats,
         s"stats: $label")
-
-      ShardedPrefixSum.releaseAll()
     }
 
     var seed = Seed(90217L)

@@ -18,6 +18,9 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Array("--species", "human", "--sfDir", sf), spark) == -1)
     assert(Cli.run(Array("--species"), spark) == -1) // dangling value flag
     assert(Cli.run(Array("--bogus"), spark) == -1)
+    // a non-integer value is a usage error, not an exception
+    for (flag <- Seq("--maxAgeDays", "--sanityFloor", "--bpeRounds"))
+      assert(Cli.run(Array(flag, "x", "--sfDir", sf), spark) == -1, flag)
   }
 
   test("--species rat writes ortholog + association state parquet") {

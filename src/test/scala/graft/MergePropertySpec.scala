@@ -197,7 +197,8 @@ class MergePropertySpec extends SparkSpec {
     var sawSweepDepletionBlock = 0
     var sawInactiveCandidate = 0
     var s = Seed(7321L)
-    for (_ <- 1 to 32) {
+    // each reconcile pins its key frame: one pin scope per case
+    for (_ <- 1 to 32) ShardedPrefixSum.scoped {
       val (st, in, symMap, active) = caseGen.pureApply(Gen.Parameters.default, s)
       s = s.next
       val sym: Int => Option[String] = symMap.get
@@ -371,7 +372,6 @@ class MergePropertySpec extends SparkSpec {
       if (expState.exists(r => inPair(r) && r.md.before(runTs) &&
         r.xsrc != "RGD")) sawSole += 1
       if (dupDeletes.nonEmpty) sawDupDelete += 1
-      ShardedPrefixSum.releaseAll() // each reconcile pins its key frame
     }
     // the property only discriminates if the guarded corners occurred:
     // a manual row in the duplicate (non-best) slot, a manual row as a

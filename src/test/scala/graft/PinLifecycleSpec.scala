@@ -6,12 +6,12 @@ import graft.model.Species
 import graft.operators.{Keys, Merge, ShardedPrefixSum}
 import graft.pipeline.OrthologPipeline
 
-/** Lifecycle of the surrogate-key / prefix-sum correctness pins
-  * (ShardedPrefixSum's cap-exempt registry): sequential pipeline runs
-  * must hold O(1) live pins with NO caller sweeps, consumed products
-  * must never trip the unmaterialized-release detector, and a
-  * composed-but-never-executed key product released by a sweep must
-  * trip it loudly. */
+/** Lifecycle of the surrogate-key / prefix-sum correctness pins (one
+  * rule: a pin lives until the innermost open ShardedPrefixSum.scoped
+  * call exits): sequential pipeline runs leave no live pin with NO
+  * caller sweeps, consumed products never trip the
+  * unmaterialized-release detector, and a composed-but-never-executed
+  * key product released by its scope trips it loudly. */
 class PinLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -56,14 +56,13 @@ class PinLifecycleSpec extends SparkSpec {
 
   test("N sequential pipeline runs hold O(1) live pins with no sweeps, " +
     "and no run releases an unmaterialized pin") {
-    ShardedPrefixSum.releaseAll() // clean slate from earlier suites
+    val pins0 = livePins
     val unmat0 = ShardedPrefixSum.unmaterializedReleases
     for (_ <- 1 to 3) {
       val r = OrthologPipeline.runSpecies(relations, state, Species.RAT, runTs)
       // the run's key pin was consumed by its own phase boundary and
       // released by the run's scope - nothing accumulates
-      assert(ShardedPrefixSum.pinnedCount == 0,
-        s"live pins after a pipeline run: ${ShardedPrefixSum.pinnedCount}")
+      assert(livePins == pins0, s"live pins after a pipeline run: $livePins")
       // consuming the results later (store/checkpoint-backed plans)
       // needs no pin and must stay deterministic
       assert(r.orthologs.count() > 0)
@@ -75,15 +74,14 @@ class PinLifecycleSpec extends SparkSpec {
 
   test("the lazily-built association state materializes through its own " +
     "scope: no pin outlives the access, keys are stable across accesses") {
-    ShardedPrefixSum.releaseAll()
+    val pins0 = livePins
     val unmat0 = ShardedPrefixSum.unmaterializedReleases
     val r = OrthologPipeline.runSpecies(relations, state, Species.RAT, runTs)
-    assert(ShardedPrefixSum.pinnedCount == 0)
+    assert(livePins == pins0)
     val first = r.associations.select("assocKey", "masterRgdId", "detailRgdId")
       .collect().map(_.toSeq).toSet
     assert(first.nonEmpty)
-    assert(ShardedPrefixSum.pinnedCount == 0,
-      "association access left a live pin behind")
+    assert(livePins == pins0, "association access left a live pin behind")
     // second access reads the memoized store-backed frame - same keys
     val second = r.associations.select("assocKey", "masterRgdId", "detailRgdId")
       .collect().map(_.toSeq).toSet
@@ -93,34 +91,36 @@ class PinLifecycleSpec extends SparkSpec {
 
   test("a composed-but-never-executed key product released by its scope " +
     "trips the unmaterialized-release detector") {
-    ShardedPrefixSum.releaseAll()
+    val pins0 = livePins
     val unmat0 = ShardedPrefixSum.unmaterializedReleases
-    ShardedPrefixSum.withExemptScope {
+    ShardedPrefixSum.scoped {
       // compose only - no action ever touches the keyed product
       Keys.assignSequential(
         Seq(1, 2, 3).toDF("id"), "key", 0L, Seq(col("id")))
       ()
     }
-    assert(ShardedPrefixSum.pinnedCount == 0)
+    assert(livePins == pins0)
     assert(ShardedPrefixSum.unmaterializedReleases == unmat0 + 1,
       "scope exit over an unconsumed key product must be a loud event")
   }
 
   test("operator-level reconcile (identity hook) keeps its lazy pin " +
-    "until a sweep; consuming first keeps the detector flat") {
-    ShardedPrefixSum.releaseAll()
+    "until its scope exits; consuming first keeps the detector flat") {
+    val pins0 = livePins
     val unmat0 = ShardedPrefixSum.unmaterializedReleases
-    val m = Merge.reconcile(
-      Seq((1, 11, 1, 3, "NCBI", "Ortholog"))
-        .toDF("srcRgdId", "destRgdId", "srcSpeciesTypeKey",
-          "destSpeciesTypeKey", "xrefDataSrc", "xrefDataSet"),
-      state.orthologs, genes, runTs, 3)
-    assert(ShardedPrefixSum.pinnedCount == 1,
-      "direct reconcile should hold its key pin until released")
-    assert(m.inserted.count() > 0) // consume -> pin materializes
-    ShardedPrefixSum.releaseAll()
-    assert(ShardedPrefixSum.pinnedCount == 0)
+    ShardedPrefixSum.scoped {
+      val m = Merge.reconcile(
+        Seq((1, 11, 1, 3, "NCBI", "Ortholog"))
+          .toDF("srcRgdId", "destRgdId", "srcSpeciesTypeKey",
+            "destSpeciesTypeKey", "xrefDataSrc", "xrefDataSet"),
+        state.orthologs, genes, runTs, 3)
+      assert(livePins == pins0 + 1,
+        "direct reconcile should hold its key pin until its scope exits")
+      assert(m.inserted.count() > 0) // consume -> pin materializes
+      assert(livePins == pins0 + 1)
+    }
+    assert(livePins == pins0)
     assert(ShardedPrefixSum.unmaterializedReleases == unmat0,
-      "sweep after consumption must not count as an unmaterialized release")
+      "scope exit after consumption must not count as an unmaterialized release")
   }
 }

@@ -137,13 +137,11 @@ class PipelineMultiRunSpec extends SparkSpec {
       .max(col("key"))).as[Long].head()
     assert(ratOrth1.nonEmpty, "rat run produced no rat-pair state")
     assert(ratAssoc1.nonEmpty, "rat run produced no weak associations")
-    graft.operators.ShardedPrefixSum.releaseAll()
 
     // ---- run 2: MOUSE over run 1's state ----
     val r2 = OrthologPipeline.runSpecies(mouseRels, s1, Species.MOUSE, ts2)
     val s2 = s1.copy(orthologs = r2.orthologs.localCheckpoint(),
       associations = r2.associations.localCheckpoint())
-    graft.operators.ShardedPrefixSum.releaseAll()
 
     // 1. pair scoping: the rat-pair state is byte-identical
     assert(pairRows(s2.orthologs, ratIds) == ratOrth1,
@@ -176,7 +174,6 @@ class PipelineMultiRunSpec extends SparkSpec {
     assert(s3Orth.map(t => t.copy(_9 = ts0)) ==
       ratOrth1.map(t => t.copy(_9 = ts0)),
       "idempotent re-run changed rat-pair state beyond the touch")
-    graft.operators.ShardedPrefixSum.releaseAll()
 
     // ---- AGR leg on the same chained universe ----
     val geneList = geneRows.map { case (id, sym, sp) =>
@@ -194,7 +191,6 @@ class PipelineMultiRunSpec extends SparkSpec {
     assert(newIds == Set(23),
       s"AGR gene ids must continue above the shared dimension: $newIds")
     val xrefs1 = a1.xrefs.localCheckpoint()
-    graft.operators.ShardedPrefixSum.releaseAll()
     // second AGR leg: the persisted binding map-resolves (renamed symbol)
     val genes2 = genes.unionByName(Seq((23, "fly9", "fly9",
         "protein-coding", 10, "fly9"))
@@ -216,7 +212,6 @@ class PipelineMultiRunSpec extends SparkSpec {
     assert(AgrMultiRunPropertySpec.collectAgr(a2.agrOrthologs)
       .map(s => (s.g1, s.g2)) == Set((23, 23)),
       "the renamed curie must keep the first leg's gene id")
-    graft.operators.ShardedPrefixSum.releaseAll()
 
     // ---- fixXRef maintenance over the final chained state ----
     def canonModel(s: String): Option[String] = {

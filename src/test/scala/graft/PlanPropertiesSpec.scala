@@ -332,7 +332,6 @@ class PlanPropertiesSpec extends SparkSpec {
           offenders += name
       }
     } finally {
-      graft.operators.ShardedPrefixSum.releaseAll()
       spark.sharedState.cacheManager.clearCache()
       graft.pipeline.Memo.clear()
     }
@@ -383,7 +382,6 @@ class PlanPropertiesSpec extends SparkSpec {
         if (bad.nonEmpty) offenders += s"$name (${bad.size} window(s))"
       }
     } finally {
-      graft.operators.ShardedPrefixSum.releaseAll()
       spark.sharedState.cacheManager.clearCache()
       graft.pipeline.Memo.clear()
     }

@@ -108,78 +108,64 @@ class ProfileDistributedSpec extends SparkSpec {
     } finally spark.sharedState.cacheManager.clearCache()
   }
 
-  test("pin lifecycle: a long session of distinct prefix sums holds at " +
-    "most maxPinned pinned frames, each exact when consumed promptly") {
+  test("pin lifecycle: 25 distinct prefix sums in one scope are each " +
+    "exact, and the scope's exit leaves no pin behind") {
     import org.apache.spark.sql.expressions.Window
-    // round-14 hardening of the r13 fix: every cumBefore call persists
-    // its ranged frame (the single-partitioner pin), so without a
-    // lifecycle a session issuing many packing/profile queries would
-    // accumulate one session-lifetime cache entry per call. The FIFO
-    // registry caps live pins at ShardedPrefixSum.MaxPinned (8);
-    // this drives 25 DISTINCT prefix sums - each consumed immediately,
-    // the documented contract - and asserts bounded cache growth with
-    // every answer still exact.
-    spark.sharedState.cacheManager.clearCache()
-    ShardedPrefixSum.releaseAll()
-    val base = spark.sparkContext.getPersistentRDDs.size
+    // every cumBefore call persists its ranged frame (the r13
+    // single-partitioner pin); a scope owns the pins made inside it and
+    // releases them all when it exits, so a long run of distinct
+    // packing/profile prefix sums leaves no session-lifetime entries
+    val pins0 = livePins
     val w = Window.partitionBy("stratum").orderBy("ord")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    for (i <- 1 to 25) {
-      val d = (1 to 200).map(j =>
-        ((j % 3).toString, j.toLong, (j % 7).toLong + i)).toDF("stratum", "ord", "x")
-      val naive = d.withColumn("cum", sum($"x").over(w) - $"x")
-        .select("stratum", "ord", "cum")
-        .as[(String, Long, Long)].collect().toSet
-      val got = ShardedPrefixSum.cumBefore(d, "x", "stratum", "ord", 6, "cum")
-        .select("stratum", "ord", "cum")
-        .as[(String, Long, Long)].collect().toSet
-      assert(got == naive, s"call $i")
+    ShardedPrefixSum.scoped {
+      for (i <- 1 to 25) {
+        val d = (1 to 200).map(j =>
+          ((j % 3).toString, j.toLong, (j % 7).toLong + i)).toDF("stratum", "ord", "x")
+        val naive = d.withColumn("cum", sum($"x").over(w) - $"x")
+          .select("stratum", "ord", "cum")
+          .as[(String, Long, Long)].collect().toSet
+        val got = ShardedPrefixSum.cumBefore(d, "x", "stratum", "ord", 6, "cum")
+          .select("stratum", "ord", "cum")
+          .as[(String, Long, Long)].collect().toSet
+        assert(got == naive, s"call $i")
+      }
+      assert(livePins == pins0 + 25, "a pin went before its scope exited")
     }
-    assert(ShardedPrefixSum.pinnedCount <= 8, ShardedPrefixSum.pinnedCount)
-    // cache growth is bounded by the cap, never by the call count
-    // (unpersist removes the RDD from the context's persistent map)
-    val live = spark.sparkContext.getPersistentRDDs.size - base
-    assert(live <= 8, s"$live persistent RDDs accumulated over 25 calls")
-    ShardedPrefixSum.releaseAll()
-    assert(ShardedPrefixSum.pinnedCount == 0)
+    assert(livePins == pins0)
   }
 
-  test("cap-exempt key pins survive FIFO pressure (a key product " +
-    "compiled after heavy packing traffic still reads its pin) and " +
-    "release on releaseAll") {
+  test("a key product composed early in a scope and compiled only after " +
+    "10 more prefix sums still reads its pin: the keys are exact") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.col
-    // Keys registers its prefix-sum pin CAP-EXEMPT: key products are
-    // handed to callers for arbitrarily late compilation (a pipeline
-    // Result's association branch), and FIFO-evicting the pin before
+    // key products are handed to callers for late compilation (a
+    // pipeline Result's association branch); a pin released before
     // that compilation would re-open the dual-range-exchange
-    // nondeterminism for the late plan. This composes a key plan,
-    // floods the registry past the cap with ordinary prefix sums, and
-    // only THEN compiles/consumes the key product - the exempt pin
-    // must still be live (counted above the cap) and the keys exact.
-    spark.sharedState.cacheManager.clearCache()
-    ShardedPrefixSum.releaseAll()
+    // nondeterminism. Nothing but the scope's exit releases a pin, so
+    // heavy prefix-sum traffic in between cannot take it.
+    val pins0 = livePins
+    val unmat0 = ShardedPrefixSum.unmaterializedReleases
     val rows = (1 to 300).map(i => (i * 7 % 1000, s"v$i")).distinct
-    val keyed = graft.operators.Keys.assignSequential(
-      rows.toDF("a", "b"), "key", 500L, Seq(col("a"), col("b")))
-    assert(ShardedPrefixSum.pinnedCount == 1)
-    val w = Window.partitionBy("stratum").orderBy("ord")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    for (i <- 1 to 10) { // > maxPinned(8) ordinary pins
-      val d = (1 to 100).map(j =>
-        ((j % 3).toString, j.toLong, (j % 5).toLong + i)).toDF("stratum", "ord", "x")
-      ShardedPrefixSum.cumBefore(d, "x", "stratum", "ord", 4, "cum").collect()
+    ShardedPrefixSum.scoped {
+      val keyed = graft.operators.Keys.assignSequential(
+        rows.toDF("a", "b"), "key", 500L, Seq(col("a"), col("b")))
+      val w = Window.partitionBy("stratum").orderBy("ord")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      for (i <- 1 to 10) {
+        val d = (1 to 100).map(j =>
+          ((j % 3).toString, j.toLong, (j % 5).toLong + i)).toDF("stratum", "ord", "x")
+        ShardedPrefixSum.cumBefore(d, "x", "stratum", "ord", 4, "cum").collect()
+      }
+      assert(livePins == pins0 + 11)
+      val got = keyed.select("a", "b", "key")
+        .as[(Int, String, Long)].collect().sortBy(r => (r._1, r._2))
+      val want = rows.sorted.zipWithIndex.map { case ((a, b), i) =>
+        (a, b, 500L + i + 1) }
+      assert(got.toSeq == want)
     }
-    // 8 surviving ordinary pins + the exempt key pin
-    assert(ShardedPrefixSum.pinnedCount == 9, ShardedPrefixSum.pinnedCount)
-    val got = keyed.select("a", "b", "key")
-      .as[(Int, String, Long)].collect().sortBy(r => (r._1, r._2))
-    val want = rows.sorted.zipWithIndex.map { case ((a, b), i) =>
-      (a, b, 500L + i + 1) }
-    assert(got.toSeq == want)
-    ShardedPrefixSum.releaseAll()
-    assert(ShardedPrefixSum.pinnedCount == 0)
-    spark.sharedState.cacheManager.clearCache()
+    assert(livePins == pins0)
+    assert(ShardedPrefixSum.unmaterializedReleases == unmat0)
   }
 
   test("summarizeDistributed returns the exact summarize rows " +

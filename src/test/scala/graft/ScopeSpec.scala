@@ -21,7 +21,6 @@ class ScopeSpec extends SparkSpec {
   /** Starts a test from an empty session: earlier suites share it. */
   private def clean(): Unit = {
     Memo.clear()
-    ShardedPrefixSum.releaseAll()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
@@ -49,11 +48,11 @@ class ScopeSpec extends SparkSpec {
     "q_stream_contam")) {
     test(s"$name leaves no persistent RDD, pin, cache entry or temp view") {
       clean()
-      val (rdds0, pins0, views0) = (nonMemo, ShardedPrefixSum.pinnedCount, views)
+      val (rdds0, pins0, views0) = (nonMemo, livePins, views)
       val entries0 = cacheEntries - Memo.owned(spark).entries.size
       assert(!runOne(name)().failed)
       assert(nonMemo == rdds0)
-      assert(ShardedPrefixSum.pinnedCount == pins0)
+      assert(livePins == pins0)
       assert(views == views0)
       assert(cacheEntries - Memo.owned(spark).entries.size == entries0)
     }
@@ -90,11 +89,9 @@ class ScopeSpec extends SparkSpec {
   test("a query whose plan throws at execution leaves nothing behind and " +
     "is reported failed") {
     val boom = Q("q_boom", (s, _) => {
-      // the persist under test stands apart from the pinned frame:
-      // releasing a pin can drop its input's cache entry with it
-      s.range(50).toDF("z").persist().count()
       val base = s.range(200).toDF("id")
-        .withColumn("g", col("id") % 3).withColumn("tok", lit(1L))
+        .withColumn("g", col("id") % 3).withColumn("tok", lit(1L)).persist()
+      base.count()
       base.createOrReplaceTempView("boom_view")
       ShardedPrefixSum.cumBefore(base, "tok", "g", "id", 2, "off")
         .withColumn("x", when(col("id") === 150, raise_error(lit("boom")))
@@ -102,7 +99,7 @@ class ScopeSpec extends SparkSpec {
     }, "SELECT 1")
     clean()
     val (rdds0, pins0, views0, entries0) =
-      (persistent, ShardedPrefixSum.pinnedCount, views, cacheEntries)
+      (persistent, livePins, views, cacheEntries)
     var errors = Seq.empty[String]
     val runs = Scope.registry(spark, dir, None, Seq(boom)) { (n, e) =>
       errors :+= s"$n: ${e.getMessage}"
@@ -111,8 +108,54 @@ class ScopeSpec extends SparkSpec {
     assert(errors.size == 1 && errors.head.startsWith("q_boom:") &&
       errors.head.contains("boom"))
     assert(persistent == rdds0)
-    assert(ShardedPrefixSum.pinnedCount == pins0)
+    assert(livePins == pins0)
     assert(views == views0)
     assert(cacheEntries == entries0)
+  }
+
+  // a frame persisted before the scope and passed to cumBefore is the
+  // caller's: the scope releases the pin over it, never the frame
+  for (throws <- Seq(false, true)) {
+    test("a caller-persisted cumBefore input keeps its cache entry when " +
+      s"the consuming job ${if (throws) "throws" else "succeeds"}") {
+      clean()
+      val input = spark.range(200).toDF("id")
+        .withColumn("g", col("id") % 3).withColumn("tok", lit(1L)).persist()
+      try {
+        input.count()
+        val held0 = Scope.held(spark)
+        val pins0 = livePins
+        val run = scala.util.Try(Scope(spark) {
+          ShardedPrefixSum.cumBefore(input, "tok", "g", "id", 2, "off")
+            .withColumn("x", when(lit(throws) && col("id") === 150,
+              raise_error(lit("boom"))).otherwise(lit(1)))
+            .write.format("noop").mode("overwrite").save()
+        })
+        assert(run.isFailure == throws)
+        assert(livePins == pins0)
+        val held1 = Scope.held(spark)
+        assert(held0.entries.forall(e => held1.entries.exists(_ eq e)),
+          "the scope dropped a cache entry it did not make")
+        assert(held1.rdds.keySet == held0.rdds.keySet)
+      } finally input.unpersist(blocking = true)
+    }
+  }
+
+  test("a temp view the scope made over a caller-persisted frame goes " +
+    "with the scope; the frame keeps its cache entry") {
+    clean()
+    val input = spark.range(200).toDF("id").persist()
+    try {
+      input.count()
+      val held0 = Scope.held(spark)
+      Scope(spark) {
+        input.createOrReplaceTempView("scope_input_view")
+        spark.table("scope_input_view").write.format("noop").mode("overwrite").save()
+      }
+      val held1 = Scope.held(spark)
+      assert(held1.views == held0.views)
+      assert(held0.entries.forall(e => held1.entries.exists(_ eq e)),
+        "dropping the view uncached the caller's frame")
+    } finally input.unpersist(blocking = true)
   }
 }

@@ -8,6 +8,10 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Live prefix-sum pins: cache entries whose plan outputs the shard
+    * column. */
+  def livePins: Int = Scope.held(spark).pins.size
+
   override def afterAll(): Unit = () // session shared across suites
 }
 

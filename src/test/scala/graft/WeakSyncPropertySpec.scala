@@ -126,7 +126,8 @@ class WeakSyncPropertySpec extends SparkSpec {
 
     def runCase(orth: List[Orth], assoc: List[Assoc],
                 rels: List[Rel], dgs: List[Rel],
-                active: Set[Int]): Unit = {
+                active: Set[Int]): Unit = ShardedPrefixSum.scoped {
+      // each iteration pins its key frame; the scope releases it
       // ---- the model ----
       val strongPairs = orth.map(o => (o.src, o.dest)).toSet
       val incAll = rels.map(r =>
@@ -313,8 +314,6 @@ class WeakSyncPropertySpec extends SparkSpec {
         .as[(Int, Int, Option[String], String)].collect().sorted.toSeq ==
         ins3.map(a => (a.m, a.d, a.sub, a.pipe)).sorted, s"D2 mirrors: $label")
       assert(assocSet(finalAssoc) == expFinal, s"final assoc state: $label")
-
-      ShardedPrefixSum.releaseAll() // each iteration pins its key frame
     }
 
     var s = Seed(40151L)

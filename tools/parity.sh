@@ -3,7 +3,9 @@
 # every driver scale factor and record the result as a committed artifact
 # (PARITY_LATEST.md). The per-round CORRECTNESS_r{N}.json only covers
 # sf0.01; this proves the same pass/fail table at sf0.001 and sf0.1 as a
-# run artifact rather than a claim. Usage: tools/parity.sh [round-label]
+# run artifact rather than a claim. One graft.tools.Smoke run at sf0.001
+# adds its query, plan-shape and scope-leak lines; a Smoke failure fails
+# the result. Usage: tools/parity.sh [round-label]
 #
 # Interruption-safe: the report is assembled at a temp path and moved
 # into place atomically only after the final Result line is stamped. A
@@ -68,6 +70,16 @@ for sf in sf0.001 sf0.01 sf0.1; do
   fi
   echo "   $summary"
 done
+echo "== smoke sf0.001 =="
+smoke_status=0
+sbt -batch "runMain graft.tools.Smoke /root/testdata/sf0.001" > /tmp/parity_smoke.log 2>&1 \
+  || smoke_status=$?
+[ "$smoke_status" = "0" ] || overall=1
+# sbt prefixes the program's stdout with "[info] "
+smoke_lines=$(grep -oE '(QUERIES_OK=[0-9]+ FAILED=[0-9]+|PLAN_VIOLATIONS=[0-9]+|SCOPE_LEFT=[0-9]+)$' \
+  /tmp/parity_smoke.log | paste -sd ' ' - || true)
+echo "- **smoke sf0.001** (exit $smoke_status): ${smoke_lines:-no result lines}" >> "$tmp_report"
+echo "   exit $smoke_status: $smoke_lines"
 echo >> "$tmp_report"
 # registry-size invariant (judge convention): the artifact names how many
 # registry queries were dumped and how many carried a DuckDB oracle.
