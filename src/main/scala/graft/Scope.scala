@@ -43,7 +43,8 @@ object Scope {
     def ++(o: Held): Held = Held(rdds ++ o.rdds,
       entries ++ (o -- this).entries, views ++ o.views)
     def size: Int = rdds.size + entries.size + views.size
-    /** The prefix-sum pins among the cache entries. */
+    /** The prefix-sum pins among the cache entries: the plans that output
+      * [[ShardedPrefixSum.cumBefore]]'s shard column. */
     def pins: Seq[CachedData] =
       entries.filter(_.plan.output.exists(_.name == "__pfx_shard"))
   }
