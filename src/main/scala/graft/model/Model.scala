@@ -249,6 +249,36 @@ object Schemas {
     StructField("oldRgdId", IntegerType),
     StructField("newRgdId", IntegerType)
   ))
+
+  // ---- sfDir tables: the driver's read-only `<dir>/<name>.parquet` ----
+  // (FIXTURES.md §C). Declared so that a read never starts a schema-
+  // inference job; each DDL is `spark.read.parquet(p).schema.toDDL`.
+  // `events` leaves out its TIMESTAMP(NANOS) `ts`, which Spark's
+  // parquet reader rejects. Read them with `Readers.table`.
+  val sfTables: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT,r_name STRING",
+    "nation" -> "n_nationkey INT,n_name STRING,n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT,c_name STRING,c_nationkey INT," +
+      "c_acctbal DOUBLE,c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT,s_name STRING,s_nationkey INT,s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT,p_name STRING,p_brand STRING,p_type STRING," +
+      "p_size INT,p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT,o_custkey BIGINT,o_orderstatus STRING," +
+      "o_totalprice DOUBLE,o_orderdate TIMESTAMP_NTZ,o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT,l_partkey BIGINT,l_suppkey BIGINT," +
+      "l_linenumber INT,l_quantity DOUBLE,l_extendedprice DOUBLE," +
+      "l_discount DOUBLE,l_tax DOUBLE,l_returnflag STRING," +
+      "l_linestatus STRING,l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT,user_id BIGINT,event_type STRING," +
+      "value DOUBLE,props STRING"),
+    "documents" -> "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  /** The declared schema of sfDir table `name`. */
+  def sfTable(name: String): StructType =
+    sfTables.getOrElse(name,
+      throw new IllegalArgumentException(s"no declared schema for sfDir table '$name'"))
 }
 
 object XdbKeys {

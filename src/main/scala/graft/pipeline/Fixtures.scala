@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Species
+import graft.sources.Readers
 
 /** Deterministic ortholog-shaped fixtures derived from the driver's
   * TPC-H-ish test tables - the flagship query runs the full pipeline on
@@ -15,13 +16,10 @@ import graft.model.Species
   */
 object Fixtures {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** Gene dimension: rgdId = p_partkey + 1000 (reserve low ids), species
     * by parity, symbol from p_name. */
   def genes(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "part").select(
+    Readers.table(spark, dir, "part").select(
       (col("p_partkey") + 1000).cast("int").as("rgdId"),
       col("p_name").as("geneSymbol"),
       col("p_name").as("geneName"),
@@ -60,7 +58,7 @@ object Fixtures {
     * l_orderkey, rat gene from l_partkey; source by line parity;
     * evidence CSV from the flags. */
   def relations(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
+    val li = Readers.table(spark, dir, "lineitem")
     val humanId = (pmod(col("l_orderkey"), lit(100)) * 2 + 1000).cast("int")
     val ratId = (pmod(col("l_partkey"), lit(100)) * 2 + 1001).cast("int")
     li.select(
@@ -78,7 +76,7 @@ object Fixtures {
 
   /** AGR mutual-best rows from orders (sparse: every 5th order). */
   def agrOrthologs(spark: SparkSession, dir: String): DataFrame = {
-    val o = t(spark, dir, "orders").filter(col("o_orderkey") % 5 === 0)
+    val o = Readers.table(spark, dir, "orders").filter(col("o_orderkey") % 5 === 0)
     val ts = java.sql.Timestamp.valueOf("2026-06-01 00:00:00")
     o.select(
       (pmod(col("o_orderkey"), lit(100)) * 2 + 1000).cast("int").as("geneRgdId1"),

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 /** TPC-H-derived fixture frames for the oracle-checked operator queries.
   *
@@ -23,9 +24,6 @@ object TpchShapes {
   val ts0: java.sql.Timestamp = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
   val runTs: java.sql.Timestamp = java.sql.Timestamp.valueOf("2026-08-01 00:00:00")
 
-  private def rd(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Evidence CSV with 1-3 tokens banded on a price column. */
   private def evBand(price: Column): Column =
     when(price > 200000, "a,b,c").when(price > 100000, "a,b").otherwise("a")
@@ -34,7 +32,7 @@ object TpchShapes {
     * allele type for the MACHINERY segment (F5 exclusion food), species
     * 1/3 by key parity. */
   def genes(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "customer").select(
+    Readers.table(s, dir, "customer").select(
       col("c_custkey").cast("int").as("rgdId"),
       col("c_name").as("geneSymbol"),
       col("c_name").as("geneName"),
@@ -48,7 +46,7 @@ object TpchShapes {
     * order. src in 0..299, dest in 0..1999 (some outside the customer
     * range -> null dest symbols exercise the nulls-last branch). */
   def m1State(s: SparkSession, dir: String): DataFrame = {
-    val base = rd(s, dir, "orders").filter(col("o_orderkey") % 4 === 0).select(
+    val base = Readers.table(s, dir, "orders").filter(col("o_orderkey") % 4 === 0).select(
       col("o_orderkey").as("key"),
       (col("o_custkey") % 300).cast("int").as("srcRgdId"),
       (col("o_orderkey") % 2000).cast("int").as("destRgdId"),
@@ -67,7 +65,7 @@ object TpchShapes {
   /** Incoming relations for Merge.reconcile from orders (o_orderkey%4=1);
     * never manual (NCBI/HGNC only), same (src, dest) dedupe. */
   def m1Incoming(s: SparkSession, dir: String): DataFrame = {
-    val base = rd(s, dir, "orders").filter(col("o_orderkey") % 4 === 1).select(
+    val base = Readers.table(s, dir, "orders").filter(col("o_orderkey") % 4 === 1).select(
       col("o_orderkey").as("okey"),
       (col("o_custkey") % 300).cast("int").as("srcRgdId"),
       (col("o_orderkey") % 2000).cast("int").as("destRgdId"),
@@ -82,7 +80,7 @@ object TpchShapes {
   /** Post-complement relations for the WeakSync incoming build, from
     * lineitem (l_orderkey%3=0). */
   def m4Relations(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "lineitem").filter(col("l_orderkey") % 3 === 0).select(
+    Readers.table(s, dir, "lineitem").filter(col("l_orderkey") % 3 === 0).select(
       (col("l_orderkey") % 400).cast("int").as("srcRgdId"),
       (col("l_partkey") % 400).cast("int").as("destRgdId"),
       when(col("l_partkey") % 2 === 0, "HGNC").otherwise("NCBI").as("dataSource"),
@@ -93,7 +91,7 @@ object TpchShapes {
   /** Downgraded orthologs feeding the WeakSync incoming build, from
     * orders (o_orderkey%4=2). */
   def m4Downgraded(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").filter(col("o_orderkey") % 4 === 2).select(
+    Readers.table(s, dir, "orders").filter(col("o_orderkey") % 4 === 2).select(
       (col("o_custkey") % 400).cast("int").as("srcRgdId"),
       (col("o_orderkey") % 400).cast("int").as("destRgdId"),
       when(col("o_orderstatus") === "O", "NCBI").otherwise("HGNC").as("xrefDataSrc"),
@@ -102,14 +100,14 @@ object TpchShapes {
   /** Strong-ortholog pairs that knock out weak candidates (J4), from
     * orders (o_orderkey%7=0). */
   def m4Strong(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").filter(col("o_orderkey") % 7 === 0).select(
+    Readers.table(s, dir, "orders").filter(col("o_orderkey") % 7 === 0).select(
       (col("o_custkey") % 400).cast("int").as("srcRgdId"),
       (col("o_orderkey") % 400).cast("int").as("destRgdId"))
 
   /** Association state for the syncDiff, from orders (o_orderkey%3=0);
     * P-status rows get a NULL subtype (the null-subtype match branch). */
   def m4AssocState(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").filter(col("o_orderkey") % 3 === 0).select(
+    Readers.table(s, dir, "orders").filter(col("o_orderkey") % 3 === 0).select(
       col("o_orderkey").as("assocKey"),
       lit("weak_ortholog").as("assocType"),
       when(col("o_orderstatus") === "O", "Ensembl")
@@ -128,7 +126,7 @@ object TpchShapes {
     * occurs at gate scale. Every 7th row carries a non-EG xdb key
     * (filtered out by the operator). */
   def resolveXrefs(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "customer").select(
+    Readers.table(s, dir, "customer").select(
       col("c_custkey").as("accXdbKey"),
       col("c_custkey").cast("int").as("rgdId"),
       when(col("c_custkey") % 7 === 0, 5).otherwise(3).as("xdbKey"),
@@ -138,7 +136,7 @@ object TpchShapes {
 
   /** Object registry from customer: negative balances are WITHDRAWN. */
   def resolveRgdIds(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "customer").select(
+    Readers.table(s, dir, "customer").select(
       col("c_custkey").cast("int").as("rgdId"),
       when(col("c_acctbal") < 0, "WITHDRAWN").otherwise("ACTIVE").as("objectStatus"),
       when(col("c_custkey") % 2 === 0, 1).otherwise(3).as("speciesTypeKey"))
@@ -157,7 +155,7 @@ object TpchShapes {
   /** Withdrawn-id history: each withdrawn id replaced by its successor
     * (which may itself be withdrawn or absent). */
   def resolveHistory(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "customer").filter(col("c_acctbal") < 0).select(
+    Readers.table(s, dir, "customer").filter(col("c_acctbal") < 0).select(
       col("c_custkey").cast("int").as("oldRgdId"),
       (col("c_custkey") + 1).cast("int").as("newRgdId"))
 
@@ -166,7 +164,7 @@ object TpchShapes {
     * and dest-side failures occur alongside the matched bulk. */
   def resolveRelations(s: SparkSession, dir: String): DataFrame = {
     def eg(c: Column) = concat(lit("EG"), (c % 2000) - (c % 2000) % 2)
-    rd(s, dir, "lineitem").filter(col("l_orderkey") % 2 === 0).select(
+    Readers.table(s, dir, "lineitem").filter(col("l_orderkey") % 2 === 0).select(
       eg(col("l_orderkey")).as("srcOtherId"),
       eg(col("l_partkey")).as("destOtherId"),
       lit(1).as("srcSpeciesTypeKey"), lit(3).as("destSpeciesTypeKey"),
@@ -181,7 +179,7 @@ object TpchShapes {
     * so duplicate (group, dest) rows are full-row duplicates (the ranking
     * stays a total order). */
   def cascadeRelations(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "lineitem").filter(col("l_orderkey") % 4 === 0).select(
+    Readers.table(s, dir, "lineitem").filter(col("l_orderkey") % 4 === 0).select(
       (col("l_orderkey") % 500).cast("int").as("groupId"),
       (col("l_orderkey") % 500).cast("int").as("srcRgdId"),
       (col("l_partkey") % 1500 + 1).cast("int").as("destRgdId"),
@@ -193,7 +191,7 @@ object TpchShapes {
 
   /** Manual (tier-4) ortholog state rows, from orders (o_orderkey%10=0). */
   def cascadeOrthologs(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").filter(col("o_orderkey") % 10 === 0).select(
+    Readers.table(s, dir, "orders").filter(col("o_orderkey") % 10 === 0).select(
       (col("o_custkey") % 500).cast("int").as("srcRgdId"),
       (col("o_orderkey") % 1500 + 1).cast("int").as("destRgdId"),
       lit(3).as("destSpeciesTypeKey"),
@@ -203,7 +201,7 @@ object TpchShapes {
   /** AGR mutual-best state (tier 3): O-status high-price orders are
     * mutual best; the rest fail one of the two flags. */
   def cascadeAgr(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").select(
+    Readers.table(s, dir, "orders").select(
       (col("o_custkey") % 500).cast("int").as("geneRgdId1"),
       (col("o_orderkey") % 1500 + 1).cast("int").as("geneRgdId2"),
       lit("high").as("confidence"),
@@ -217,7 +215,7 @@ object TpchShapes {
   /** Forward (1->3) ortholog rows from orders; src in 0..399, dest in
     * 400..796 so base rows can never accidentally mirror each other. */
   def d1Base(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").select(
+    Readers.table(s, dir, "orders").select(
       col("o_orderkey").as("key"),
       (col("o_custkey") % 400).cast("int").as("srcRgdId"),
       (col("o_orderkey") % 397 + 400).cast("int").as("destRgdId"),
@@ -258,7 +256,7 @@ object TpchShapes {
   /** Weak assoc base rows: master = customer key (species by parity),
     * detail in 1..140 (always inside the customer range). */
   def d2Base(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").select(
+    Readers.table(s, dir, "orders").select(
       col("o_orderkey").as("assocKey"),
       lit("weak_ortholog").as("assocType"),
       when(col("o_orderstatus") === "O", "Ensembl")
@@ -282,7 +280,7 @@ object TpchShapes {
 
   /** Reverse orthologs that take (master, detail) pairs out of D2 scope. */
   def d2Orthologs(s: SparkSession, dir: String): DataFrame =
-    rd(s, dir, "orders").filter(col("o_orderkey") % 6 === 0).select(
+    Readers.table(s, dir, "orders").filter(col("o_orderkey") % 6 === 0).select(
       (col("o_orderkey") % 140 + 1).cast("int").as("srcRgdId"),
       col("o_custkey").cast("int").as("destRgdId"))
 

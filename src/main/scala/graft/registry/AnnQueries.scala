@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.functions._
 import graft.llm.Ann
 import graft.registry.Shared._
+import graft.sources.Readers
 
 /** Vector queries: projections, brute-force / LSH / IVF / PQ
   * retrieval, k-means steps, semantic dedup and contamination. DuckDB
@@ -77,7 +78,7 @@ object AnnQueries {
     // same literal planes
     Q("q_emb_project", (s, dir) => {
       val planes = Ann.hyperplanes(64, 8, seed = 19L)
-      Ann.randomProject(t(s, dir, "embeddings"), planes)
+      Ann.randomProject(Readers.table(s, dir, "embeddings"), planes)
         .select(col("vec_id"),
           posexplode(Ann.quantize(col("projected"), 1000.0)))
         .withColumnRenamed("pos", "dim_idx").withColumnRenamed("col", "q")
@@ -94,7 +95,7 @@ object AnnQueries {
     Q("q_ann_bruteforce", (s, dir) => {
       val dim = 64
       val query = Ann.hyperplanes(dim, 1, seed = 7L).head
-      Ann.cosineTopK(t(s, dir, "embeddings"), query, 10)
+      Ann.cosineTopK(Readers.table(s, dir, "embeddings"), query, 10)
         .select(col("vec_id"))
     },
       s"""SELECT vec_id FROM embeddings
@@ -104,7 +105,7 @@ object AnnQueries {
     Q("q_ann_lsh", (s, dir) => {
       val dim = 64
       val query = Ann.hyperplanes(dim, 1, seed = 7L).head
-      Ann.annTopK(t(s, dir, "embeddings"), query, 10, dim, bits = 6)
+      Ann.annTopK(Readers.table(s, dir, "embeddings"), query, 10, dim, bits = 6)
         .select(col("vec_id"))
     },
       {
@@ -123,7 +124,7 @@ object AnnQueries {
       val dim = 64
       val query = Ann.hyperplanes(dim, 1, seed = 7L).head
       val centroids = Ann.hyperplanes(dim, 8, seed = 11L)
-      Ann.ivfTopK(t(s, dir, "embeddings"), query, 10, centroids, nprobe = 2)
+      Ann.ivfTopK(Readers.table(s, dir, "embeddings"), query, 10, centroids, nprobe = 2)
         .select(col("vec_id"))
     },
       {
@@ -139,7 +140,7 @@ object AnnQueries {
     // vectors, IVF-celled with per-row probe selection, self excluded
     Q("q_ann_knn_join", (s, dir) => {
       val centroids = Ann.hyperplanes(64, 8, seed = 11L)
-      val emb = t(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Ann.knnJoin(
         emb.filter(col("vec_id") < 5).withColumnRenamed("vec_id", "q_id"),
         emb, k = 5, centroids, nprobe = 2, excludeSelf = true)
@@ -149,7 +150,7 @@ object AnnQueries {
       knnJoinOracleSql),
 
     Q("q_ann_neardup", (s, dir) =>
-      Ann.cosineNearDupPairs(t(s, dir, "embeddings"), dim = 64,
+      Ann.cosineNearDupPairs(Readers.table(s, dir, "embeddings"), dim = 64,
         threshold = 0.4, bits = 4)
         .select(col("id_a"), col("id_b")),
       {
@@ -167,7 +168,7 @@ object AnnQueries {
     // excluded) - the acceptance metric that sizes nprobe/centroids
     Q("q_ann_recall", (s, dir) => {
       val centroids = Ann.hyperplanes(64, 8, seed = 11L)
-      val emb = t(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       Ann.recallAtK(
         emb.filter(col("vec_id") < 5).withColumnRenamed("vec_id", "q_id"),
         emb, k = 5, centroids, nprobe = 2, excludeSelf = true)
@@ -220,7 +221,7 @@ object AnnQueries {
     // deterministic centroids
     Q("q_ann_ivf", (s, dir) => {
       val centroids = Ann.hyperplanes(64, 8, seed = 11L)
-      Ann.ivfAssign(t(s, dir, "embeddings"), centroids)
+      Ann.ivfAssign(Readers.table(s, dir, "embeddings"), centroids)
         .groupBy(col("ivf_cell")).agg(count(lit(1)).as("n"))
     },
       {
@@ -234,7 +235,7 @@ object AnnQueries {
     // a quantized grid - the engine-stable surface of kmeansCentroids)
     Q("q_ann_kmeans_step", (s, dir) => {
       val centroids = Ann.hyperplanes(64, 8, seed = 11L)
-      Ann.kmeansStep(t(s, dir, "embeddings"), centroids)
+      Ann.kmeansStep(Readers.table(s, dir, "embeddings"), centroids)
     },
       // Lloyd step: same cell assignment, then exact integer sums of the
       // 1000-quantized coordinates per (cell, dim) and one int/int
@@ -258,7 +259,7 @@ object AnnQueries {
 
     // product-quantization code assignment (the IVF-PQ compression step)
     Q("q_ann_pq_assign", (s, dir) =>
-      Ann.pqAssign(t(s, dir, "embeddings"), pqCodebooks)
+      Ann.pqAssign(Readers.table(s, dir, "embeddings"), pqCodebooks)
         .select(col("vec_id") +:
           pqCodebooks.indices.map(j => col(s"pq_code_$j")): _*),
       // PQ codes: same argmax-over-dot-products surface as the IVF cell
@@ -271,7 +272,7 @@ object AnnQueries {
     // driver-side lookup tables - the query never touches corpus floats
     Q("q_ann_ivfpq", (s, dir) => {
       val centroids = Ann.hyperplanes(annDim, 8, seed = 11L)
-      Ann.ivfPqTopK(t(s, dir, "embeddings"), annQuery, 10, centroids,
+      Ann.ivfPqTopK(Readers.table(s, dir, "embeddings"), annQuery, 10, centroids,
         pqCodebooks)
     },
       // IVF-PQ ADC: same probe cells and PQ codes as their own oracles,
@@ -290,7 +291,7 @@ object AnnQueries {
     Q("q_ann_ivfpq_artifact", (s, dir) => {
       val centroids = annServedCentroids(s)
       val codebooks = graft.llm.AnnArtifact.loadCodebooks(s, annArtifactDir(s))
-      Ann.ivfPqTopK(t(s, dir, "embeddings"), annQuery, 10, centroids,
+      Ann.ivfPqTopK(Readers.table(s, dir, "embeddings"), annQuery, 10, centroids,
         codebooks)
     },
       // the artifact round trip is bit-exact, so the loaded-model search
@@ -300,7 +301,7 @@ object AnnQueries {
     // prototypicality pruning: drop the floor(n*0.25) most-central rows
     // of each IVF cell under the (cosine-to-centroid desc, id asc) order
     Q("q_ann_prune", (s, dir) =>
-      Ann.prototypicalityPrune(t(s, dir, "embeddings"),
+      Ann.prototypicalityPrune(Readers.table(s, dir, "embeddings"),
         Ann.hyperplanes(64, 8, seed = 11L), fraction = 0.25),
       // prototypicality pruning recomputed: cosine to the own-cell
       // centroid is m (the winning unit-centroid dot) over the row norm;
@@ -329,7 +330,7 @@ object AnnQueries {
     // flagged when any benchmark row (vec_id % 20 == 7) in their 2
     // probed IVF cells is cosine-similar >= 0.35
     Q("q_contam_semantic", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       graft.llm.Contamination.semanticScreen(
         emb.filter(pmod(col("vec_id"), lit(20)) =!= 7),
         emb.filter(pmod(col("vec_id"), lit(20)) === 7),

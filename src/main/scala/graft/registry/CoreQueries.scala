@@ -19,7 +19,7 @@ object CoreQueries {
   /** Gene dimension for the operator-routed report queries (shared so
     * every report query and its oracle derive the same frames). */
   private def reportGenes(s: SparkSession, dir: String, maxId: Int): DataFrame =
-    t(s, dir, "part").filter(col("p_partkey") <= maxId).select(
+    Readers.table(s, dir, "part").filter(col("p_partkey") <= maxId).select(
       col("p_partkey").cast("int").as("rgdId"),
       col("p_name").as("geneSymbol"),
       when(col("p_partkey") % 11 === 0, "allele")
@@ -30,7 +30,7 @@ object CoreQueries {
     * species cycling 1..5 (3 = the reported species; 4-5 land outside
     * the human/mouse/rat partner set). */
   private def reportRgdIds(s: SparkSession, dir: String, maxId: Int): DataFrame =
-    t(s, dir, "part").filter(col("p_partkey") <= maxId).select(
+    Readers.table(s, dir, "part").filter(col("p_partkey") <= maxId).select(
       col("p_partkey").cast("int").as("rgdId"),
       when(col("p_partkey") % 7 === 0, "WITHDRAWN").otherwise("ACTIVE")
         .as("objectStatus"),
@@ -41,7 +41,7 @@ object CoreQueries {
     * member lines (the dup flag), multi-match gene ids (G1/G2 resolve to
     * two customers each and drop), and a zero-match id (G11). */
   private def homologenePairs(s: SparkSession, dir: String): DataFrame = {
-    val entries = t(s, dir, "lineitem")
+    val entries = Readers.table(s, dir, "lineitem")
       .filter(col("l_orderkey") % 2 === 1 && col("l_linenumber") === 1)
       .select((col("l_orderkey") % 8000).cast("int").as("homologene_group_id"),
         (col("l_suppkey") % 4).cast("int").as("taxsel"),
@@ -53,7 +53,7 @@ object CoreQueries {
           col("taxsel") + 1).as("tax_id"),
         col("gene_id"))
       .filter(col("tax_id") =!= 7955) // parse-time badSpecies drop
-    val resolution = t(s, dir, "customer")
+    val resolution = Readers.table(s, dir, "customer")
       .filter(col("c_custkey") <= 13)
       .select(concat(lit("G"), col("c_custkey") % 11).as("gene_id"),
         col("c_custkey").cast("int").as("rgdId"))
@@ -381,14 +381,14 @@ object CoreQueries {
   val all: Seq[Q] = Seq(
     // ---- S2/F1/F2/F4: scan + predicate pushdown + projection ----
     Q("q_f2_filter", (s, dir) =>
-      t(s, dir, "lineitem")
+      Readers.table(s, dir, "lineitem")
         .filter(col("l_returnflag") === "R" && col("l_linestatus") === "F")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
          WHERE l_returnflag='R' AND l_linestatus='F'"""),
 
     Q("q_f4_projection", (s, dir) =>
-      t(s, dir, "part").filter(col("p_size") > 20)
+      Readers.table(s, dir, "part").filter(col("p_size") > 20)
         .select(col("p_partkey"), upper(col("p_brand")).as("brand_uc"),
           col("p_size")),
       """SELECT p_partkey, upper(p_brand) AS brand_uc, p_size FROM part
@@ -396,7 +396,7 @@ object CoreQueries {
 
     // F5/F6: type exclusion + status predicate
     Q("q_f5_exclusion", (s, dir) =>
-      t(s, dir, "orders")
+      Readers.table(s, dir, "orders")
         .filter(!col("o_orderstatus").isin("F") &&
           col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority")),
@@ -406,9 +406,9 @@ object CoreQueries {
 
     // F3/X13: set filter + broadcast dimension join
     Q("q_f3_set_filter", (s, dir) =>
-      t(s, dir, "customer")
+      Readers.table(s, dir, "customer")
         .filter(col("c_mktsegment").isin("BUILDING", "AUTOMOBILE"))
-        .join(broadcast(t(s, dir, "nation")),
+        .join(broadcast(Readers.table(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("c_mktsegment"), col("n_name")),
       """SELECT c_custkey, c_mktsegment, n_name
@@ -417,8 +417,8 @@ object CoreQueries {
 
     // ---- J1: resolution join with multiplicity classification ----
     Q("q_j1_resolution", (s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_acctbal") > 0)
-      t(s, dir, "nation")
+      val cust = Readers.table(s, dir, "customer").filter(col("c_acctbal") > 0)
+      Readers.table(s, dir, "nation")
         .join(cust, col("c_nationkey") === col("n_nationkey"), "left")
         .groupBy(col("n_nationkey"), col("n_name"))
         .agg(count(col("c_custkey")).as("active_c"),
@@ -443,9 +443,9 @@ object CoreQueries {
 
     // J2: withdrawn -> replacement (MAX over history shape)
     Q("q_j2_replacement", (s, dir) => {
-      val repl = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+      val repl = Readers.table(s, dir, "orders").filter(col("o_orderstatus") === "O")
         .groupBy(col("o_custkey")).agg(max(col("o_orderkey")).as("replacement"))
-      t(s, dir, "customer")
+      Readers.table(s, dir, "customer")
         .join(repl, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_custkey"), col("replacement"))
     },
@@ -457,8 +457,8 @@ object CoreQueries {
 
     // J4: existence as semi join
     Q("q_j4_semi", (s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").select(col("o_custkey")),
+      Readers.table(s, dir, "customer")
+        .join(Readers.table(s, dir, "orders").select(col("o_custkey")),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name")),
       """SELECT c_custkey, c_name FROM customer
@@ -466,8 +466,8 @@ object CoreQueries {
 
     // J10: genes-without-orthologs as anti join
     Q("q_j10_anti", (s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").select(col("o_custkey")),
+      Readers.table(s, dir, "customer")
+        .join(Readers.table(s, dir, "orders").select(col("o_custkey")),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name")),
       """SELECT c_custkey, c_name FROM customer
@@ -478,9 +478,9 @@ object CoreQueries {
       def leg(df: DataFrame, key: String) =
         df.groupBy(col(key).as("n_nationkey")).count()
           .filter(col("count") > 2).select(col("n_nationkey"))
-      leg(t(s, dir, "supplier"), "s_nationkey")
-        .union(leg(t(s, dir, "customer"), "c_nationkey")).distinct()
-        .join(t(s, dir, "nation"), Seq("n_nationkey"))
+      leg(Readers.table(s, dir, "supplier"), "s_nationkey")
+        .union(leg(Readers.table(s, dir, "customer"), "c_nationkey")).distinct()
+        .join(Readers.table(s, dir, "nation"), Seq("n_nationkey"))
         .select(col("n_nationkey"), col("n_name"))
         .orderBy(lower(col("n_name")))
     },
@@ -495,7 +495,7 @@ object CoreQueries {
 
     // J11/O3: multimap with sorted-first deterministic pick
     Q("q_j11_multimap", (s, dir) =>
-      t(s, dir, "customer").groupBy(col("c_nationkey"))
+      Readers.table(s, dir, "customer").groupBy(col("c_nationkey"))
         .agg(element_at(sort_array(collect_list(col("c_custkey"))), 1)
           .as("first_id"),
           count(lit(1)).as("n")),
@@ -505,7 +505,7 @@ object CoreQueries {
 
     // J9: partner report with best-score post-filter (window anyBest)
     Q("q_j9_partner_filter", (s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Readers.table(s, dir, "orders")
         .withColumn("is_best", (col("o_orderstatus") === "O").cast("int"))
       val w = Window.partitionBy(col("o_custkey"))
       o.withColumn("any_best", max(col("is_best")).over(w))
@@ -529,7 +529,7 @@ object CoreQueries {
     // duplicate relations, both-endpoints-ACTIVE, species sets, union
     // distinct (Dao:672-689)
     Q("q_j8_crosslinked_op", (s, dir) => {
-      val orth = t(s, dir, "lineitem").select(
+      val orth = Readers.table(s, dir, "lineitem").select(
         (col("l_partkey") % 500).cast("int").as("srcRgdId"),
         (col("l_suppkey") % 500).cast("int").as("destRgdId"))
       graft.operators.Reports.crossLinkedOrthologs(
@@ -556,7 +556,7 @@ object CoreQueries {
     // J9 through Reports.agrPartnerReport: mutual-best suppression per
     // query gene, partner species via the registry (OrthoTool.java:126-166)
     Q("q_j9_partner_op", (s, dir) => {
-      val agr = t(s, dir, "orders").select(
+      val agr = Readers.table(s, dir, "orders").select(
         (col("o_custkey") % 300).cast("int").as("geneRgdId1"),
         (col("o_orderkey") % 400).cast("int").as("geneRgdId2"),
         when(col("o_orderstatus") === "O", "Y").otherwise("N").as("isBestScore"),
@@ -587,7 +587,7 @@ object CoreQueries {
     // species with no SRC-side relation, NO type exclusion (the
     // published SQL; the allele/splice drop is log-lines-only)
     Q("q_j10_no_orth_op", (s, dir) => {
-      val orth = t(s, dir, "orders").select(
+      val orth = Readers.table(s, dir, "orders").select(
         (col("o_orderkey") % 350).cast("int").as("srcRgdId"),
         lit(1).as("destRgdId"))
       graft.operators.Reports.genesWithoutOrthologs(
@@ -608,7 +608,7 @@ object CoreQueries {
     // doubles is order-independent below 2^53); prices go through
     // floor(x*100) -> BIGINT cents so both engines sum exact integers
     Q("q_a1_groupagg", (s, dir) =>
-      t(s, dir, "lineitem")
+      Readers.table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity")).as("sum_qty"),
@@ -624,7 +624,7 @@ object CoreQueries {
 
     // A3/O4/X2: evidence-token merge (collect_set + sort + concat_ws)
     Q("q_a3_merge", (s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_orderkey"))
+      Readers.table(s, dir, "lineitem").groupBy(col("l_orderkey"))
         .agg(concat_ws(", ", array_sort(collect_set(col("l_returnflag"))))
           .as("flags")),
       """SELECT l_orderkey,
@@ -634,7 +634,7 @@ object CoreQueries {
 
     // A4: evidence count over a CSV column
     Q("q_a4_evidence_count", (s, dir) =>
-      t(s, dir, "part").select(col("p_partkey"),
+      Readers.table(s, dir, "part").select(col("p_partkey"),
         Exprs.evidenceCount(translate(col("p_name"), " ", ",")).as("ev_count")),
       """SELECT p_partkey,
              CASE WHEN p_name IS NULL OR p_name = '' THEN 0
@@ -643,7 +643,7 @@ object CoreQueries {
 
     // A5: scalar counts + freshness max (X9 shape)
     Q("q_a5_counts", (s, dir) =>
-      t(s, dir, "orders").agg(
+      Readers.table(s, dir, "orders").agg(
         count(lit(1)).as("n_orders"),
         countDistinct(col("o_custkey")).as("n_custs"),
         max(col("o_orderdate")).as("max_date")),
@@ -654,7 +654,7 @@ object CoreQueries {
 
     // A7/J6: sync diff as one full-outer join + classification
     Q("q_a7_sync_diff", (s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Readers.table(s, dir, "orders")
       val incoming = o.filter(col("o_orderstatus") === "O")
         .select(col("o_orderkey").as("k"), lit(1).as("inc"))
       val inRgd = o.filter(col("o_totalprice") > 150000)
@@ -677,7 +677,7 @@ object CoreQueries {
 
     // A8/X12: threshold-guarded stale delete (scalar guard math)
     Q("q_a8_threshold", (s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Readers.table(s, dir, "orders")
       o.agg(
         count(lit(1)).as("total"),
         sum(when(col("o_orderdate") < lit("1998-01-01"), 1).otherwise(0))
@@ -696,7 +696,7 @@ object CoreQueries {
 
     // A9: HAVING-filtered count
     Q("q_a9_having", (s, dir) =>
-      t(s, dir, "orders").groupBy(col("o_custkey")).count()
+      Readers.table(s, dir, "orders").groupBy(col("o_custkey")).count()
         .filter(col("count") > 12)
         .select(col("o_custkey"), col("count").as("n")),
       """SELECT o_custkey, count(*) AS n FROM orders
@@ -712,7 +712,7 @@ object CoreQueries {
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(src.desc, col("l_linenumber").asc, col("l_suppkey").asc,
           col("l_partkey").asc, col("l_extendedprice").asc)
-      t(s, dir, "lineitem").withColumn("rn", row_number().over(w))
+      Readers.table(s, dir, "lineitem").withColumn("rn", row_number().over(w))
         .filter(col("rn") > 1 && col("l_suppkey") % 2 === 0) // pipeline-owned analog
         .select(col("l_orderkey"), col("l_linenumber"))
     },
@@ -730,7 +730,7 @@ object CoreQueries {
     Q("q_w2_bestfit", (s, dir) => {
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_quantity").desc, col("l_linenumber").asc)
-      t(s, dir, "lineitem").withColumn("rn", row_number().over(w))
+      Readers.table(s, dir, "lineitem").withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
     },
@@ -746,7 +746,7 @@ object CoreQueries {
       val tier = when(col("l_returnflag") === "R", 3)
         .when(col("l_returnflag") === "A", 2).otherwise(1)
       val w = Window.partitionBy(col("l_orderkey"))
-      t(s, dir, "lineitem").withColumn("tier", tier)
+      Readers.table(s, dir, "lineitem").withColumn("tier", tier)
         .withColumn("top_tier", max(col("tier")).over(w))
         .filter(col("tier") === col("top_tier"))
         .withColumn("n_top", count(lit(1)).over(w))
@@ -768,13 +768,13 @@ object CoreQueries {
 
     // ---- O1/X5: case-insensitive sort ----
     Q("q_o1_sort", (s, dir) =>
-      t(s, dir, "supplier").orderBy(lower(col("s_name")))
+      Readers.table(s, dir, "supplier").orderBy(lower(col("s_name")))
         .select(col("s_suppkey"), col("s_name")),
       """SELECT s_suppkey, s_name FROM supplier ORDER BY lower(s_name)"""),
 
     // O4: sorted-set canonicalization
     Q("q_o4_canonicalize", (s, dir) =>
-      t(s, dir, "part").select(col("p_partkey"),
+      Readers.table(s, dir, "part").select(col("p_partkey"),
         Exprs.canonicalizeList(col("p_name"), "\\s+", ", ").as("canon")),
       """SELECT p_partkey,
              array_to_string(list_sort(list_distinct(
@@ -783,9 +783,9 @@ object CoreQueries {
 
     // ---- U1: union + distinct ----
     Q("q_u1_union", (s, dir) =>
-      t(s, dir, "customer").filter(col("c_acctbal") < 0)
+      Readers.table(s, dir, "customer").filter(col("c_acctbal") < 0)
         .select(col("c_custkey"))
-        .union(t(s, dir, "customer").filter(col("c_nationkey") < 5)
+        .union(Readers.table(s, dir, "customer").filter(col("c_nationkey") < 5)
           .select(col("c_custkey")))
         .distinct(),
       """SELECT c_custkey FROM customer WHERE c_acctbal < 0
@@ -794,7 +794,7 @@ object CoreQueries {
 
     // U2: reverse-relation synthesis (symmetrization)
     Q("q_u2_reverse", (s, dir) => {
-      val sn = t(s, dir, "supplier")
+      val sn = Readers.table(s, dir, "supplier")
         .select(col("s_suppkey").as("a"), col("s_nationkey").cast("bigint").as("b"))
       sn.union(sn.select(col("b").as("a"), col("a").as("b"))).distinct()
     },
@@ -805,9 +805,9 @@ object CoreQueries {
 
     // U6: list difference (detach) as anti join / EXCEPT
     Q("q_u6_difference", (s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderstatus") === "F")
+      Readers.table(s, dir, "orders").filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"))
-        .except(t(s, dir, "orders").filter(col("o_totalprice") < 100000)
+        .except(Readers.table(s, dir, "orders").filter(col("o_totalprice") < 100000)
           .select(col("o_orderkey"))),
       """SELECT o_orderkey FROM orders WHERE o_orderstatus='F'
          EXCEPT
@@ -815,7 +815,7 @@ object CoreQueries {
 
     // ---- X4: Greek transliteration ----
     Q("q_x4_translit", (s, dir) =>
-      t(s, dir, "part").select(col("p_partkey"),
+      Readers.table(s, dir, "part").select(col("p_partkey"),
         Exprs.transliterateGreek(concat(col("p_name"), lit(" αβΔκ")))
           .as("symbol")),
       """SELECT p_partkey,
@@ -825,7 +825,7 @@ object CoreQueries {
 
     // X6: prefix strip + cast
     Q("q_x6_prefix", (s, dir) =>
-      t(s, dir, "customer").select(col("c_custkey"),
+      Readers.table(s, dir, "customer").select(col("c_custkey"),
         Exprs.stripPrefixToInt(col("c_name"), 9).cast("bigint").as("parsed_id")),
       """SELECT c_custkey,
              CAST(CAST(substr(c_name, 10) AS INT) AS BIGINT) AS parsed_id
@@ -833,7 +833,7 @@ object CoreQueries {
 
     // X8 + X5: quote trim + case-insensitive equality
     Q("q_x8_quotetrim", (s, dir) =>
-      t(s, dir, "part").select(col("p_partkey"),
+      Readers.table(s, dir, "part").select(col("p_partkey"),
         Exprs.unquoteTrim(concat(lit("\""), col("p_name"), lit("\"")))
           .as("unquoted"),
         Exprs.symbolMatches(col("p_name"), upper(col("p_name"))).cast("int")
@@ -844,7 +844,7 @@ object CoreQueries {
 
     // M3: ortholog-type assignment CASE
     Q("q_m3_type_assign", (s, dir) =>
-      t(s, dir, "customer").select(col("c_custkey"),
+      Readers.table(s, dir, "customer").select(col("c_custkey"),
         when(col("c_nationkey") <= 2, graft.model.Species.directOrthologTypeKey)
           .otherwise(graft.model.Species.transitiveOrthologTypeKey)
           .as("type_key")),
@@ -856,7 +856,7 @@ object CoreQueries {
     Q("q_m7_fixxref", (s, dir) => {
       val orig = concat(col("p_name"), lit(" "), col("p_name"))
       val canon = concat_ws(", ", array_sort(array_distinct(split(orig, "\\s+", -1))))
-      t(s, dir, "part")
+      Readers.table(s, dir, "part")
         .select(col("p_partkey"), orig.as("orig"), canon.as("canon"))
         .filter(col("canon") =!= col("orig") &&
           length(col("canon")) < length(col("orig")))
@@ -871,7 +871,7 @@ object CoreQueries {
 
     // X10: age-in-days freshness math (datediff)
     Q("q_x10_age_days", (s, dir) =>
-      t(s, dir, "orders").select(col("o_orderkey"),
+      Readers.table(s, dir, "orders").select(col("o_orderkey"),
         datediff(lit("2026-08-12"), col("o_orderdate")).as("age_days")),
       """SELECT o_orderkey,
              CAST(datediff('day', o_orderdate, TIMESTAMP '2026-08-12') AS INT)
@@ -880,7 +880,7 @@ object CoreQueries {
 
     // X11: signed-diff report format
     Q("q_x11_signed_diff", (s, dir) =>
-      t(s, dir, "orders").groupBy(col("o_orderstatus"))
+      Readers.table(s, dir, "orders").groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"))
         .select(col("o_orderstatus"),
           format_string("%+d", col("n") - 1000).as("diff")),
@@ -890,7 +890,7 @@ object CoreQueries {
 
     // D6: symbol QC - rows whose two symbol columns disagree case-insens
     Q("q_d6_symbol_qc", (s, dir) =>
-      t(s, dir, "part")
+      Readers.table(s, dir, "part")
         .filter(!(lower(col("p_name")) <=> lower(col("p_type"))))
         .select(col("p_partkey"), col("p_name"), col("p_type")),
       """SELECT p_partkey, p_name, p_type FROM part
@@ -901,7 +901,7 @@ object CoreQueries {
     // human-only, double case-insensitive mismatch with the
     // Ensembl-symbol save (pinned in SymbolQcPropertySpec)
     Q("q_d6_symbol_qc_op", (s, dir) => {
-      val res = t(s, dir, "orders")
+      val res = Readers.table(s, dir, "orders")
         .filter(col("o_orderkey") % 5 === 0)
         .select(
           concat(lit("AGR:"), col("o_custkey") % 80).as("curie"),
@@ -909,12 +909,12 @@ object CoreQueries {
           when(col("o_orderkey") % 4 === 0, 3).otherwise(1)
             .cast("int").as("speciesTypeKey"),
           (col("o_custkey") % 300 + 1).cast("int").as("rgdId"))
-      val genes = t(s, dir, "part").filter(col("p_partkey") <= 300).select(
+      val genes = Readers.table(s, dir, "part").filter(col("p_partkey") <= 300).select(
         col("p_partkey").cast("int").as("rgdId"),
         col("p_brand").as("geneSymbol"),
         concat(lit("brand#"), col("p_partkey") % 50 + 10)
           .as("ensemblGeneSymbol"))
-      val xrefs = t(s, dir, "customer").filter(col("c_custkey") <= 240)
+      val xrefs = Readers.table(s, dir, "customer").filter(col("c_custkey") <= 240)
         .select(lit(63).as("xdbKey"),
           concat(lit("AGR:"), col("c_custkey") % 80).as("accId"),
           (col("c_custkey") % 300 + 1).cast("int").as("rgdId"))
@@ -957,9 +957,9 @@ object CoreQueries {
     // M6: touch-seen + cutoff sweep (xref QC shape): touched rows get the
     // run timestamp, untouched stale rows drop out
     Q("q_m6_touch_sweep", (s, dir) => {
-      val touched = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+      val touched = Readers.table(s, dir, "orders").filter(col("o_orderstatus") === "O")
         .select(col("o_custkey")).distinct()
-      t(s, dir, "customer")
+      Readers.table(s, dir, "customer")
         .join(touched, col("c_custkey") === col("o_custkey"), "left")
         .withColumn("mod_date",
           when(col("o_custkey").isNotNull, lit("2026-08-01"))
@@ -1161,7 +1161,7 @@ object CoreQueries {
     // A1/A3/U2/X2: duplicate-relation merge (HGNC+NCBI evidence union with
     // the literal NCBI marker) + complementary-relation synthesis
     Q("q_a2_group_merge", (s, dir) => {
-      val rel = t(s, dir, "lineitem").filter(col("l_orderkey") % 5 === 0).select(
+      val rel = Readers.table(s, dir, "lineitem").filter(col("l_orderkey") % 5 === 0).select(
         (col("l_orderkey") % 300).cast("int").as("srcRgdId"),
         ((col("l_partkey") % 300) + 1000).cast("int").as("destRgdId"),
         lit(1).as("srcSpeciesTypeKey"), lit(3).as("destSpeciesTypeKey"),
@@ -1209,7 +1209,7 @@ object CoreQueries {
     // unique total order, computed without a single-partition window)
     Q("q_s7_seqkeys", (s, dir) =>
       Keys.assignSequential(
-        t(s, dir, "customer").filter(col("c_acctbal") > 0).select(col("c_custkey")),
+        Readers.table(s, dir, "customer").filter(col("c_acctbal") > 0).select(col("c_custkey")),
         "key", 100000L, Seq(col("c_custkey"))),
       """SELECT c_custkey,
              100000 + ROW_NUMBER() OVER (ORDER BY c_custkey) AS key
@@ -1217,7 +1217,7 @@ object CoreQueries {
 
     // F7: unmapped-relation drop
     Q("q_f7_unmapped", (s, dir) =>
-      Resolve.dropUnmapped(t(s, dir, "orders").select(
+      Resolve.dropUnmapped(Readers.table(s, dir, "orders").select(
         col("o_orderkey"),
         when(col("o_orderstatus") === "O", col("o_custkey")).otherwise(-1)
           .as("srcRgdId"),
@@ -1233,7 +1233,7 @@ object CoreQueries {
 
     // X3: '|'-separated algorithm list sort
     Q("q_x3_pipesort", (s, dir) =>
-      t(s, dir, "part").select(col("p_partkey"),
+      Readers.table(s, dir, "part").select(col("p_partkey"),
         Exprs.sortAlgorithms(
           concat(col("p_brand"), lit("|"), col("p_name"), lit("|"), col("p_brand")))
           .as("algos")),
@@ -1246,7 +1246,7 @@ object CoreQueries {
     // X1: positional tab split (the readers' fixed-column access pattern)
     Q("q_x1_tabsplit", (s, dir) => {
       val line = concat_ws("\t", col("p_name"), col("p_brand"), col("p_type"))
-      t(s, dir, "part").select(col("p_partkey"),
+      Readers.table(s, dir, "part").select(col("p_partkey"),
         split(line, "\t").getItem(1).as("f1"),
         split(line, "\t").getItem(2).as("f2"))
     },
@@ -1260,7 +1260,7 @@ object CoreQueries {
     // X12: percent / absolute threshold parse (the real driver-side math)
     Q("q_x12_threshold", (s, dir) => {
       import s.implicits._
-      val total = t(s, dir, "orders").count()
+      val total = Readers.table(s, dir, "orders").count()
       Seq((total, Agr.parseThreshold("10%", total), Agr.parseThreshold("3%", total),
         Agr.parseThreshold("500", total))).toDF("total", "pct10", "pct3", "abs500")
     },
@@ -1273,8 +1273,8 @@ object CoreQueries {
     // D4/D5: sanity floor + freshness gate - the real guards run (throwing
     // on violation) and the row surfaces their scalar inputs
     Q("q_d4_d5_guards", (s, dir) => {
-      val cust = Readers.requireSanityFloor(t(s, dir, "customer"), 100)
-      val agr = t(s, dir, "orders").select(col("o_orderdate").as("lastUpdateDate"))
+      val cust = Readers.requireSanityFloor(Readers.table(s, dir, "customer"), 100)
+      val agr = Readers.table(s, dir, "orders").select(col("o_orderdate").as("lastUpdateDate"))
       graft.operators.Reports.checkAllianceFreshness(agr,
         java.sql.Timestamp.valueOf("2026-08-12 00:00:00"), maxAgeDays = 20000)
       cust.agg(count(lit(1)).as("n_rows")).crossJoin(
@@ -1559,7 +1559,7 @@ object CoreQueries {
     // never participate (HomologeneLoader.qcGroups + loadGroups,
     // getOrthologsForGroupId's source filter)
     Q("q_s4_homologene_sync", (s, dir) => {
-      val inRgd = t(s, dir, "orders").select(
+      val inRgd = Readers.table(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("key"),
         (col("o_orderkey") % 8000).cast("int").as("homologeneGroupId"),
         (col("o_custkey") % 13 + 1).cast("int").as("srcRgdId"),
@@ -1621,7 +1621,7 @@ object CoreQueries {
 
     // ---- events: per-entity aggregation (A2/A5 shape on the stream table) ----
     Q("q_e_user_stats", (s, dir) =>
-      t(s, dir, "events").groupBy(col("user_id"))
+      Readers.table(s, dir, "events").groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           sum(floor(col("value") * 100).cast("long")).as("sum_value_cents"),
           countDistinct(col("event_type")).as("n_types")),
@@ -1636,7 +1636,7 @@ object CoreQueries {
     // total (t, event_id) order
     Q("q_e_rolling", (s, dir) =>
       Features.rollingFeatures(
-        t(s, dir, "events")
+        Readers.table(s, dir, "events")
           .withColumn("t", pmod(col("event_id"), lit(86400L))))
         .select(col("event_id"), col("user_id"), col("t"),
           col("n_600s"), col("min_v_600s"), col("max_v_600s"),
@@ -1668,7 +1668,7 @@ object CoreQueries {
       // neighborhood explode (heavy per-row map work) parallelizes
       // past the one scan task exactly like tDocsPar's documents read
       graft.operators.FuzzyJoin.levenshteinPairs(
-        t(s, dir, "customer")
+        Readers.table(s, dir, "customer")
           .repartition(shufflePartitions(s), col("c_custkey")),
         idCol = "c_custkey", strCol = "c_name"),
       // gap-based sessionization recomputed via lag + running break count;
@@ -1705,7 +1705,7 @@ object CoreQueries {
     // per-user p95 outlier flags (exact percentile; approx variant is
     // the documented scale path)
     Q("q_e_outliers", (s, dir) =>
-      Features.withOutlierFlags(t(s, dir, "events"))
+      Features.withOutlierFlags(Readers.table(s, dir, "events"))
         .select(col("event_id"), col("user_id"), col("value"),
           col("p_q"), col("is_outlier")),
       // round(p_q, 6) mirrors the Spark side's threshold quantization -
@@ -1724,7 +1724,7 @@ object CoreQueries {
     // (order-dependent cross-engine noise)
     Q("q_e_sessions", (s, dir) =>
       graft.streaming.EventStream.sessionStats(
-        t(s, dir, "events")
+        Readers.table(s, dir, "events")
           .withColumn("ts", timestamp_seconds(pmod(col("event_id"), lit(86400L)))),
         gap = "15 minutes")
         .select(col("sess_start_s"), col("sess_end_s"), col("user_id"),
@@ -1749,7 +1749,7 @@ object CoreQueries {
     // click gets the latest view at-or-before it per user, via the
     // union + running-last plan in TemporalJoins (one shuffle, no join)
     Q("q_j_asof", (s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Readers.table(s, dir, "events")
         .withColumn("ts_s", pmod(col("event_id"), lit(86400L)))
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts_s"))
@@ -1778,7 +1778,7 @@ object CoreQueries {
     // bucketed range join: (click, view) pairs with the click 0-600s
     // after the view - time-quantized equi-join, no BroadcastNestedLoop
     Q("q_j_range", (s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Readers.table(s, dir, "events")
         .withColumn("ts_s", pmod(col("event_id"), lit(86400L)))
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
@@ -1808,7 +1808,7 @@ object CoreQueries {
     // value-map `percentile` buffer with a value histogram + sharded
     // prefix sum + rank-neighbor lookup - same rows, scale-safe plan
     Q("q_profile_stats", (s, dir) =>
-      graft.operators.Profile.summarizeDistributed(t(s, dir, "lineitem"),
+      graft.operators.Profile.summarizeDistributed(Readers.table(s, dir, "lineitem"),
         Seq("l_quantity", "l_linenumber", "l_partkey")),
       // profiling recomputed per column (quantile_cont == Spark's exact
       // interpolated percentile)

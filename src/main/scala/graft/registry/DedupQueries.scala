@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.functions._
 import graft.llm.{Ann, Dedup, TextAnalysis}
 import graft.registry.Shared._
+import graft.sources.Readers
 
 /** Deduplication and contamination queries: exact, normalized,
   * MinHash, SimHash, n-gram and winnowing pair finders, component
@@ -139,7 +140,7 @@ object DedupQueries {
   val all: Seq[Q] = Seq(
     // ---- LLM-pipeline operators over documents/embeddings ----
     Q("q_d_exact_dedup", (s, dir) =>
-      Dedup.exact(t(s, dir, "documents")),
+      Dedup.exact(Readers.table(s, dir, "documents")),
       """SELECT text, min(doc_id) AS keep_id, count(*) AS dup_count
          FROM documents GROUP BY text"""),
 
@@ -147,7 +148,7 @@ object DedupQueries {
     // deterministic, LSH-free near-dup path; df-cut mirrored in the
     // oracle)
     Q("q_d_jaccard_exact", (s, dir) =>
-      Dedup.jaccardPairsExact(t(s, dir, "documents"), threshold = 0.5,
+      Dedup.jaccardPairsExact(Readers.table(s, dir, "documents"), threshold = 0.5,
         maxDf = 400),
       // exact inverted-index Jaccard recomputed with the same tokenizer
       // ([a-z0-9_] runs of the lowercased text), 3-gram shingles, <3
@@ -175,7 +176,7 @@ object DedupQueries {
          WHERE CAST(common AS DOUBLE) / (na.nsh + nb.nsh - common) >= 0.5"""),
 
     Q("q_d_norm_dedup", (s, dir) =>
-      Dedup.normalized(t(s, dir, "documents")),
+      Dedup.normalized(Readers.table(s, dir, "documents")),
       """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
                AS norm_md5,
              min(doc_id) AS keep_id, count(*) AS dup_count
@@ -195,7 +196,7 @@ object DedupQueries {
     // portable md5-bit SimHash with chunk blocking + hamming verify -
     // the DuckDB-checkable twin of the xxhash64 SimHash fast path
     Q("q_d_simhash_md5", (s, dir) =>
-      Dedup.simhashMd5Pairs(t(s, dir, "documents")),
+      Dedup.simhashMd5Pairs(Readers.table(s, dir, "documents")),
       // md5-bit SimHash recomputed end-to-end: bit j of md5(token) gives
       // a +-1 vote, signature = per-bit sign over the token multiset as a
       // 64-char '0'/'1' string, 4x16-char chunk blocking with the SAME
@@ -248,7 +249,7 @@ object DedupQueries {
     // the COMPLETE near-dup dedup flow under one oracle: md5-minhash
     // pairs -> connected components -> keep min-id per cluster
     Q("q_d_dedup_e2e", (s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       Dedup.nearDupSurvivors(docs, minhashMd5PairsShared(s, dir))
         .select(col("doc_id"), col("source"))
     },
@@ -282,7 +283,7 @@ object DedupQueries {
     // id) instead of the min-id convention; reuses the session-memoized
     // md5-minhash pair frame
     Q("q_d_quality_pick", (s, dir) => {
-      val scored = TextAnalysis.withQualityFeatures(t(s, dir, "documents"))
+      val scored = TextAnalysis.withQualityFeatures(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("quality_score"))
       Dedup.nearDupClusterPick(scored, minhashMd5PairsShared(s, dir),
         "quality_score")
@@ -348,7 +349,7 @@ object DedupQueries {
     // sub-document boilerplate removal: 10-word chunks shared by >=2
     // docs are deleted, survivors re-joined in order
     Q("q_d_boilerplate", (s, dir) =>
-      Dedup.removeBoilerplateChunks(t(s, dir, "documents"),
+      Dedup.removeBoilerplateChunks(Readers.table(s, dir, "documents"),
         chunkWords = 10, minDocs = 2),
       // 10-word chunks, md5 per chunk, drop chunks in >=2 distinct docs,
       // reassemble survivors in position order
@@ -384,7 +385,7 @@ object DedupQueries {
     // incremental dedup of the crawl (src != src0) against a reference
     // corpus (src0 stands in for the existing training set)
     Q("q_d_against_ref", (s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       Dedup.dedupAgainstReference(
         docs.filter(col("source") =!= "src0"),
         docs.filter(col("source") === "src0"))
@@ -408,7 +409,7 @@ object DedupQueries {
     // (short doc embedded in long doc) symmetric Jaccard misses;
     // estimate-only from k-sized sketches, never a shingle-set join
     Q("q_d_containment", (s, dir) =>
-      graft.llm.Dedup.bottomKContainmentPairs(t(s, dir, "documents"),
+      graft.llm.Dedup.bottomKContainmentPairs(Readers.table(s, dir, "documents"),
         k = 12, shingleN = 3, blockHashes = 3, minContainment = 0.5),
       // bottom-k containment replay: same shingle fragment as the minhash
       // oracles, one md5 hash, sorted-prefix sketches, union-bottom-k
@@ -468,7 +469,7 @@ object DedupQueries {
     // cross-source duplicate-overlap matrix on the normalized content
     // hash: which sources re-crawl each other + within-source dup count
     Q("q_d_source_overlap", (s, dir) =>
-      graft.llm.Dedup.sourceOverlapMatrix(t(s, dir, "documents")),
+      graft.llm.Dedup.sourceOverlapMatrix(Readers.table(s, dir, "documents")),
       // overlap matrix replay: distinct (source, norm-hash) collapse,
       // within-source diagonal + cross-source hash join
       """WITH h AS (SELECT source AS src,
@@ -497,7 +498,7 @@ object DedupQueries {
     // shared-winnow-fingerprint pairs via the postings join with a
     // boilerplate df-cut - position-robust substring near-dup
     Q("q_d_winnow_pairs", (s, dir) =>
-      graft.llm.Dedup.winnowPairs(t(s, dir, "documents"),
+      graft.llm.Dedup.winnowPairs(Readers.table(s, dir, "documents"),
         k = 4, w = 4, minShared = 2, maxDf = 100),
       // the winnow fingerprint frame mined for pairs: distinct (doc, fp),
       // df-cut <= 100, self-join, shared-count >= 2
@@ -530,7 +531,7 @@ object DedupQueries {
     // eval set; unhashed shingles so DuckDB recomputes the join (the
     // hashed variant is the scale path, pinned equal in LlmSpec)
     Q("q_contamination", (s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       graft.llm.Contamination.ngramOverlap(
         docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0)
@@ -572,7 +573,7 @@ object DedupQueries {
     // maxHamming=2: the 3-chunk (22/21/21) pigeonhole instance - the
     // radius-derived chunking the fixed 4x16 twin cannot exercise
     Q("q_d_simhash_pairs", (s, dir) =>
-      Dedup.simhashMd5Pairs(t(s, dir, "documents"), maxHamming = 2)
+      Dedup.simhashMd5Pairs(Readers.table(s, dir, "documents"), maxHamming = 2)
         .select(col("id_a"), col("id_b"), col("hamming")),
       simhashMd5PairsSql(2)),
 
@@ -592,7 +593,7 @@ object DedupQueries {
     // known bounded diameter, recomputed by DuckDB via unrolled min-label
     // propagation
     Q("q_d_components", (s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Readers.table(s, dir, "orders")
       val x = col("o_orderkey") % 5000
       val hub = x - (x % 10)
       val star = o.filter(x % 10 =!= 0)
@@ -631,7 +632,7 @@ object DedupQueries {
     // SemDeDup semantic dedup: IVF-celled greedy keep-lowest-id over
     // within-cell cosine near-dup pairs (non-transitive by design)
     Q("q_d_semdedup", (s, dir) =>
-      Ann.semanticDedup(t(s, dir, "embeddings"),
+      Ann.semanticDedup(Readers.table(s, dir, "embeddings"),
         Ann.hyperplanes(64, 8, seed = 11L), threshold = 0.4),
       // SemDeDup recomputed: same cell assignment, a row is dropped iff a
       // lower-id same-cell row is cosine-similar >= 0.4 (NOT EXISTS as a

@@ -2,6 +2,7 @@ package graft.registry
 
 import org.apache.spark.sql.functions._
 import graft.registry.Shared._
+import graft.sources.Readers
 
 /** Multimodal asset queries: metadata, frame sampling, and image,
   * audio and video perceptual-hash pairs through the real decoders. */
@@ -14,7 +15,7 @@ object MmQueries {
     // both queries independently
     Q("q_mm_assets_meta", (s, dir) =>
       graft.llm.Multimodal.metadataOnly(
-        graft.llm.Multimodal.syntheticAssets(t(s, dir, "documents"), "doc_id", "text")),
+        graft.llm.Multimodal.syntheticAssets(Readers.table(s, dir, "documents"), "doc_id", "text")),
       // synthetic asset metadata recomputed from (doc_id, text length)
       """SELECT CAST(doc_id AS BIGINT) AS asset_id,
              CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
@@ -27,7 +28,7 @@ object MmQueries {
 
     Q("q_mm_frames", (s, dir) =>
       graft.llm.Multimodal.sampleFrames(
-        graft.llm.Multimodal.syntheticAssets(t(s, dir, "documents"), "doc_id", "text"),
+        graft.llm.Multimodal.syntheticAssets(Readers.table(s, dir, "documents"), "doc_id", "text"),
         everyMs = 60000)
         .select(col("asset_id"), col("frame_idx"), col("frame_ts_ms")),
       // frame sampling: one row per 60s frame of each video asset
@@ -154,7 +155,7 @@ object MmQueries {
     Q("q_mm_image_phash", (s, dir) => {
       // single-row-group source: repartition before the per-row codec
       // work so encode/decode parallelizes (see q_sample_token_budget)
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id")).select(
+      val docs = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id")).select(
         col("doc_id").cast("long").as("asset_id"),
         (col("doc_id") % 64).cast("int").as("c"),
         (col("doc_id") % 7 + 1).cast("int").as("a"),
@@ -202,7 +203,7 @@ object MmQueries {
       // planted BMP twins at -doc_id - 1 (disjoint from real ids at
       // every scale factor; see q_mm_phash_pairs); repartitioned so the
       // per-row codec work parallelizes past the single-file scan task
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
       val base = docs.select(col("doc_id").cast("long").as("asset_id"),
         graft.llm.Multimodal.blockNoiseImageBytes(
           col("doc_id"), 16, 16, 2, "png").as("bytes"))
@@ -260,7 +261,7 @@ object MmQueries {
     // amplitude = (md5Byte("seed|i") - 128) * 256, so DuckDB verifies
     // the codec round trip arithmetically with its own md5.
     Q("q_mm_audio_phash", (s, dir) => {
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
         .select(col("doc_id").cast("long").as("asset_id"))
       val staged = docs
         .withColumn("bytes", graft.llm.Multimodal.blockToneAudioBytes(
@@ -297,7 +298,7 @@ object MmQueries {
     // WAV and AIFF decode paths recover identical PCM - byte-level the
     // two containers differ entirely (endianness included)
     Q("q_mm_audio_pairs", (s, dir) => {
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
       val base = docs.select(col("doc_id").cast("long").as("asset_id"),
         graft.llm.Multimodal.blockToneAudioBytes(
           col("doc_id"), 64, 25, "wav").as("bytes"))
@@ -354,7 +355,7 @@ object MmQueries {
     // md5Byte("seed|f|i"), so DuckDB replays decode + sampling +
     // hashing arithmetically.
     Q("q_mm_video_frames", (s, dir) => {
-      val assets = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val assets = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
         .select(col("doc_id").cast("long").as("asset_id"))
         .withColumn("bytes", graft.llm.Multimodal.blockNoiseAviBytes(
           col("asset_id"), 16, 16, 2, frames = 4))

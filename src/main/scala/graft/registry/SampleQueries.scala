@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.functions._
 import graft.llm.TextAnalysis
 import graft.registry.Shared._
+import graft.sources.Readers
 
 /** Sampling, mixing, packing and splitting queries. */
 object SampleQueries {
@@ -79,7 +80,7 @@ object SampleQueries {
   val all: Seq[Q] = Seq(
     // deterministic per-source down-sampling (data mixing)
     Q("q_sample_stratified", (s, dir) =>
-      graft.llm.Splitting.sampleStratified(t(s, dir, "documents"),
+      graft.llm.Splitting.sampleStratified(Readers.table(s, dir, "documents"),
         rates = Map("src0" -> 0.25, "src1" -> 0.5, "src2" -> 0.0,
           "src3" -> 1.0), defaultRate = 0.75)
         .select(col("doc_id"), col("source"), col("sample_bucket"),
@@ -102,7 +103,7 @@ object SampleQueries {
     // counts->rates->cutoff chain would never be exercised by the gate
     Q("q_sample_temperature", (s, dir) =>
       graft.llm.Splitting.temperatureSample(
-        t(s, dir, "documents").withColumn("stratum",
+        Readers.table(s, dir, "documents").withColumn("stratum",
           when(pmod(col("doc_id"), lit(10)) < 7, "big")
             .when(pmod(col("doc_id"), lit(10)) < 9, "mid")
             .otherwise("small")),
@@ -148,7 +149,7 @@ object SampleQueries {
       // rose to ~0.9 purely from this). Repartition the raw text first
       // - one cheap shuffle buys full-width parallelism for the map
       // stage, exactly what multi-split input gives free at real scale
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
       val scored = TextAnalysis.withQualityFeatures(docs)
         .select(col("doc_id"),
           TextAnalysis.tokenCountBpeIsh(col("text")).as("n_tokens"),
@@ -189,7 +190,7 @@ object SampleQueries {
     Q("q_sample_budget_stratum", (s, dir) => {
       // single-row-group source: parallelize the scoring map stage
       // explicitly (see q_sample_token_budget)
-      val docs = t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+      val docs = Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
       val scored = TextAnalysis.withQualityFeatures(docs)
         .select(col("doc_id"), col("source"),
           TextAnalysis.tokenCountBpeIsh(col("text")).as("n_tokens"),
@@ -231,7 +232,7 @@ object SampleQueries {
     // and the zero-drop path in one query
     Q("q_sample_mixture", (s, dir) =>
       graft.llm.Splitting.mixtureSample(
-        t(s, dir, "documents").withColumn("stratum",
+        Readers.table(s, dir, "documents").withColumn("stratum",
           when(pmod(col("doc_id"), lit(10)) < 7, "big")
             .when(pmod(col("doc_id"), lit(10)) < 9, "mid")
             .otherwise("small")),
@@ -277,7 +278,7 @@ object SampleQueries {
     // reference, mid is out of recipe (0 copies)
     Q("q_sample_mixture_up", (s, dir) =>
       graft.llm.Splitting.mixtureRepeat(
-        t(s, dir, "documents").withColumn("stratum",
+        Readers.table(s, dir, "documents").withColumn("stratum",
           when(pmod(col("doc_id"), lit(10)) < 7, "big")
             .when(pmod(col("doc_id"), lit(10)) < 9, "mid")
             .otherwise("small")),
@@ -296,7 +297,7 @@ object SampleQueries {
     Q("q_sample_mixture_real", (s, dir) =>
       graft.llm.Splitting.realizeCopies(
         graft.llm.Splitting.mixtureRepeat(
-          t(s, dir, "documents").withColumn("stratum",
+          Readers.table(s, dir, "documents").withColumn("stratum",
             when(pmod(col("doc_id"), lit(10)) < 7, "big")
               .when(pmod(col("doc_id"), lit(10)) < 9, "mid")
               .otherwise("small")),
@@ -313,7 +314,7 @@ object SampleQueries {
     // deterministic training-order shuffle: content-hash shard + rank
     // within shard - a reproducible permutation with no global sort
     Q("q_shuffle_order", (s, dir) =>
-      graft.llm.Splitting.shuffleOrder(t(s, dir, "documents"))
+      graft.llm.Splitting.shuffleOrder(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("shard"), col("pos")),
       // training-order shuffle recomputed: same salted hash, first hex
       // char as the shard, rank of (full hash, id) within the shard
@@ -329,7 +330,7 @@ object SampleQueries {
       // project BEFORE packing: cumBefore pins one materialization of
       // its input, so the pinned frame must be the narrow (id, stratum,
       // tokens) projection, not the full corpus row with text
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           TextAnalysis.wordCount(col("text")).as("n_tokens"))
       graft.llm.Packing.assignBins(docs, budgetTokens = 512)
@@ -351,7 +352,7 @@ object SampleQueries {
     // 256-token training sequence the doc touches; docs straddle cuts
     Q("q_pack_chunks", (s, dir) => {
       // narrow projection before packing (see q_pack_bins)
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           TextAnalysis.wordCount(col("text")).as("n_tokens"))
       graft.llm.Packing.assignChunks(docs, seqLen = 256)
@@ -386,7 +387,7 @@ object SampleQueries {
     // the session-memoized md5-minhash pair frame
     Q("q_split_leakage_safe", (s, dir) =>
       graft.llm.Splitting.leakageSafeSplit(
-        t(s, dir, "documents"), minhashMd5PairsShared(s, dir))
+        Readers.table(s, dir, "documents"), minhashMd5PairsShared(s, dir))
         .select(col("doc_id"), col("source"), col("split_bucket"),
           col("split")),
       // leakage-safe split: the SAME pairs + component chain as
@@ -445,7 +446,7 @@ object SampleQueries {
     Q("q_pack_export", (s, dir) => {
       val outDir = graft.pipeline.Memo.once(s, s"pack_export:$dir") {
         val merges = bpeMergesShared(s, dir).map { case (_, l, r, _) => (l, r) }
-        val docs = t(s, dir, "documents")
+        val docs = Readers.table(s, dir, "documents")
         // tDocsPar: the count-encode tokenize is the same single-file
         // map stage q_pack_bpe already spreads (guide §2.5 input skew);
         // chunk assignment is partitioning-invariant (Packing scaladoc)
@@ -472,7 +473,7 @@ object SampleQueries {
 
     // deterministic content-hash train/val/test assignment
     Q("q_split_hash", (s, dir) =>
-      graft.llm.Splitting.assignSplit(t(s, dir, "documents"))
+      graft.llm.Splitting.assignSplit(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("split_bucket"), col("split")),
       // content-hash split: first md5 byte, hex-string range compare
       """SELECT doc_id, substr(md5(text), 1, 2) AS split_bucket,

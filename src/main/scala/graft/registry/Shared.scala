@@ -3,18 +3,11 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.llm.{Ann, Dedup, TextAnalysis}
+import graft.sources.Readers
 
 /** Fixtures, memoized results and oracle builders used by more than
   * one query family. */
 private[registry] object Shared {
-
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    // events.ts is TIMESTAMP(NANOS), which Spark's parquet reader rejects
-    // at schema inference; give an explicit schema for the columns we use
-    if (name == "events")
-      s.read.schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-        .parquet(s"$dir/$name.parquet")
-    else s.read.parquet(s"$dir/$name.parquet")
 
   /** The session's shuffle parallelism - the explicit partition count
     * for repartitions that parallelize per-row codec/scoring work past
@@ -36,7 +29,7 @@ private[registry] object Shared {
     * stage alone was 0.78 s single-task at sf0.1). Same pattern and
     * justification as the q_mm_* codec queries. */
   def tDocsPar(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
+    Readers.table(s, dir, "documents").repartition(shufflePartitions(s), col("doc_id"))
 
   /** The ONE scratch root for everything the registry materializes on
     * local disk (flagship state tables, export round-trips, stream
@@ -118,7 +111,7 @@ private[registry] object Shared {
       // solo training 1.36 -> 2.04 s - the same tokenize->aggregate
       // partial-agg fan-out loss cd33575 measured on q_t_lm_ppl; the
       // single-task tokenize feeds a vocab-sized combine here
-      TextAnalysis.bpeTrain(t(s, dir, "documents"), rounds = 6)
+      TextAnalysis.bpeTrain(Readers.table(s, dir, "documents"), rounds = 6)
         .as[(Int, String, String, Long)].collect().toSeq.sortBy(_._1)
     }
 

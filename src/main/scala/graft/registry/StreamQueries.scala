@@ -2,7 +2,9 @@ package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.Schemas
 import graft.registry.Shared._
+import graft.sources.Readers
 
 /** Structured Streaming queries: file-source streams over the test
   * tables, each checked against the batch recomputation of its output. */
@@ -121,12 +123,12 @@ object StreamQueries {
       val name = "stream_contam_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val src = s.readStream
-        .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+        .schema(Schemas.sfTable("documents"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
         .filter(col("doc_id") % 97 =!= 0)
         .repartition(shufflePartitions(s), col("doc_id"))
-      val bench = t(s, dir, "documents")
+      val bench = Readers.table(s, dir, "documents")
         .filter(col("doc_id") % 97 === 0)
         .withColumnRenamed("doc_id", "bench_id")
       // complete-mode re-emit: the trailing no-data batch recomputes
@@ -169,7 +171,7 @@ object StreamQueries {
       val name = "stream_sessions_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val src = s.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .schema(Schemas.sfTable("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
         .withColumn("ts", timestamp_seconds(pmod(col("event_id"), lit(86400L))))
@@ -215,7 +217,7 @@ object StreamQueries {
       val name = "stream_dedup_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val src = s.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .schema(Schemas.sfTable("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
         // +1 day: epoch-0 event time would sit exactly on the initial
@@ -257,7 +259,7 @@ object StreamQueries {
       val name = "stream_neardup_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val src = s.readStream
-        .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+        .schema(Schemas.sfTable("documents"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
         // one file per micro-batch = one scan task: spread the md5
@@ -309,13 +311,13 @@ object StreamQueries {
         java.util.UUID.randomUUID().toString.replace("-", "")
       val centroids = annServedCentroids(s)
       val src = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
+        .schema(Schemas.sfTable("embeddings"))
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .filter(col("vec_id") < 5)
         .withColumnRenamed("vec_id", "q_id")
       val cands = graft.streaming.StreamingAnn.candidates(
-        src, t(s, dir, "embeddings"), centroids, nprobe = 2,
+        src, Readers.table(s, dir, "embeddings"), centroids, nprobe = 2,
         excludeSelf = true)
       val q = graft.streaming.StreamingAnn.topK(cands, k = 5)
         .writeStream.format("memory").queryName(name)
@@ -349,14 +351,14 @@ object StreamQueries {
     // asserted at run time (this query is the cross-batch complement
     // of q_stream_neardup's single-batch guard).
     Q("q_stream_neardup_mb", (s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       val mid = docs.agg(max(col("doc_id"))).first().getLong(0) / 2
       val sdir = twoFileStreamDir(s"graft_neardup_mb:$dir",
         docs.filter(col("doc_id") <= mid), docs.filter(col("doc_id") > mid))
       val name = "stream_neardup_mb_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val src = s.readStream
-        .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+        .schema(Schemas.sfTable("documents"))
         .option("maxFilesPerTrigger", "1")
         .parquet(sdir)
         .repartition(shufflePartitions(s), col("doc_id"))
@@ -391,7 +393,7 @@ object StreamQueries {
     // over the append sink equals the batch knnJoin rows (oracle shared
     // verbatim); >= 2 data batches asserted at run time.
     Q("q_stream_ann_mb", (s, dir) => {
-      val emb = t(s, dir, "embeddings")
+      val emb = Readers.table(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
       val sdir = twoFileStreamDir(s"graft_ann_mb:$dir", queries, queries)
       val name = "stream_ann_mb_" +
@@ -399,7 +401,7 @@ object StreamQueries {
       // served from the same loaded-once artifact as q_stream_ann
       val centroids = annServedCentroids(s)
       val src = s.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
+        .schema(Schemas.sfTable("embeddings"))
         .option("maxFilesPerTrigger", "1")
         .parquet(sdir)
         .withColumnRenamed("vec_id", "q_id")
@@ -425,7 +427,7 @@ object StreamQueries {
       val name = "stream_counts_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val src = s.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .schema(Schemas.sfTable("events"))
         .option("pathGlobFilter", "events.parquet") // file source wants a dir
         .parquet(dir)
         .withColumn("ts", timestamp_seconds(pmod(col("event_id"), lit(86400L))))

@@ -3,6 +3,7 @@ package graft.registry
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, TextAnalysis}
 import graft.registry.Shared._
+import graft.sources.Readers
 
 /** Text-analysis queries: tokenizer training and encoding (BPE,
   * byte BPE, WordPiece, unigram LM), corpus statistics, sketches,
@@ -649,7 +650,7 @@ object TextQueries {
   val all: Seq[Q] = Seq(
     // corpus vocabulary top-k under a TOTAL order (count desc, term asc)
     Q("q_t_vocab", (s, dir) =>
-      TextAnalysis.topTerms(t(s, dir, "documents"), 20),
+      TextAnalysis.topTerms(Readers.table(s, dir, "documents"), 20),
       """SELECT term, count(*) AS n FROM (
            SELECT unnest(list_filter(
              string_split_regex(lower(trim(text)), '\s+'), x -> x <> ''))
@@ -660,7 +661,7 @@ object TextQueries {
     // per-document top term by (tf desc, df asc, term asc) - the
     // integer-exact TF-IDF argmax
     Q("q_t_top_terms", (s, dir) =>
-      TextAnalysis.topTermPerDoc(t(s, dir, "documents")),
+      TextAnalysis.topTermPerDoc(Readers.table(s, dir, "documents")),
       """WITH w AS (SELECT doc_id,
              unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
                x -> x <> '')) AS term
@@ -676,7 +677,7 @@ object TextQueries {
 
     // OOV rate vs the corpus' own top-10 vocabulary (broadcast join)
     Q("q_t_oov", (s, dir) =>
-      TextAnalysis.withOovRate(t(s, dir, "documents"), vocabSize = 10)
+      TextAnalysis.withOovRate(Readers.table(s, dir, "documents"), vocabSize = 10)
         .select(col("doc_id"), col("n_tokens"), col("n_oov"),
           col("oov_rate")),
       """WITH w AS (SELECT doc_id,
@@ -701,7 +702,7 @@ object TextQueries {
     // C4/Gopher-style composite quality filter: keep flag + first
     // failing rule
     Q("q_t_filter", (s, dir) =>
-      TextAnalysis.withQualityFilter(t(s, dir, "documents"))
+      TextAnalysis.withQualityFilter(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("keep"), col("drop_reason")),
       // quality filter: same features as q_t_quality / q_t_repetition,
       // same rule order, first failing rule is the reason
@@ -758,7 +759,7 @@ object TextQueries {
 
     // per-source log2 token-length histogram (sequence-budget planning)
     Q("q_t_length_hist", (s, dir) =>
-      TextAnalysis.lengthHistogram(t(s, dir, "documents")),
+      TextAnalysis.lengthHistogram(Readers.table(s, dir, "documents")),
       // log2 token-length histogram: len(bin(n)) is the integer-exact
       // floor(log2)+1 on both engines; all-integer aggregates
       """SELECT source,
@@ -776,7 +777,7 @@ object TextQueries {
     // per-source corpus health report (dominant drop reason under a
     // total order; integer aggregates + one int/int division)
     Q("q_t_source_report", (s, dir) =>
-      TextAnalysis.sourceQualityReport(t(s, dir, "documents")),
+      TextAnalysis.sourceQualityReport(Readers.table(s, dir, "documents")),
       // per-source report over the same rule family as q_t_filter; the
       // dominant drop reason is picked under (count desc, reason asc)
       """WITH f AS (
@@ -850,7 +851,7 @@ object TextQueries {
     // dedup -> split -> stratified sample (src1 at 50%), DuckDB-oracled
     // end to end - every stage is a pure function of content
     Q("q_llm_prep_e2e", (s, dir) =>
-      graft.llm.PrepPipeline.run(t(s, dir, "documents"),
+      graft.llm.PrepPipeline.run(Readers.table(s, dir, "documents"),
         rates = Map("src1" -> 0.5)),
       // the composed prep flow: scrub placeholders -> rule filter on the
       // scrubbed text -> keep-lowest-id per normalized hash -> md5 split
@@ -930,7 +931,7 @@ object TextQueries {
 
     // token-commonness: mean corpus document-frequency per doc
     Q("q_t_commonness", (s, dir) =>
-      TextAnalysis.withCommonnessScore(t(s, dir, "documents"))
+      TextAnalysis.withCommonnessScore(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("n_tokens"), col("sum_df"),
           col("mean_df")),
       """WITH w AS (SELECT doc_id,
@@ -952,7 +953,7 @@ object TextQueries {
     // the corpus, score every doc by avg negative log-likelihood /
     // perplexity (exact integer micro-nat sums; see LmScore scaladoc)
     Q("q_t_lm_ppl", (s, dir) =>
-      graft.llm.LmScore.bigramLmScores(t(s, dir, "documents")),
+      graft.llm.LmScore.bigramLmScores(Readers.table(s, dir, "documents")),
       // add-one bigram LM trained on the corpus, replayed: unigram /
       // bigram count tables, per-token log-probs quantized to integer
       // micro-nats BEFORE the per-doc sum (exact integer aggregation -
@@ -992,7 +993,7 @@ object TextQueries {
     // DSIR importance weighting: hashed-unigram log-likelihood ratio of
     // a target domain (source='src0') vs the raw corpus, per doc
     Q("q_t_dsir", (s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Readers.table(s, dir, "documents")
       graft.llm.LmScore.dsirScores(docs, docs.filter(col("source") === "src0"))
     },
       // DSIR hashed-unigram importance weights: target = source 'src0',
@@ -1025,7 +1026,7 @@ object TextQueries {
     // per-source unigram KL divergence from the corpus mixture - the
     // distribution-drift dashboard a data-mixing decision reads
     Q("q_t_source_kl", (s, dir) =>
-      graft.llm.LmScore.sourceKlReport(t(s, dir, "documents")),
+      graft.llm.LmScore.sourceKlReport(Readers.table(s, dir, "documents")),
       // per-source KL(P_s || Q) over add-one unigram models on the shared
       // corpus vocabulary; each term quantized to pico-nats pre-sum
       """WITH tok AS (SELECT source AS src, unnest(list_filter(
@@ -1071,7 +1072,7 @@ object TextQueries {
     // sketch that replaces exact count(DISTINCT) at corpus scale)
     Q("q_sk_hll", (s, dir) =>
       graft.llm.Sketches.hllReport(
-        t(s, dir, "documents").select(col("source"),
+        Readers.table(s, dir, "documents").select(col("source"),
           explode(TextAnalysis.normalizedWords(col("text"))).as("w")),
         "source", col("w"), p = 10),
       // HLL registers replayed: md5-hex -> 60-bit int, bucket = top 10
@@ -1103,7 +1104,7 @@ object TextQueries {
     // collision overestimate)
     Q("q_sk_cms", (s, dir) =>
       graft.llm.Sketches.cmsHeavyHitterCheck(
-        t(s, dir, "documents").select(
+        Readers.table(s, dir, "documents").select(
           explode(TextAnalysis.normalizedWords(col("text"))).as("w")),
         col("w"), k = 20, depth = 4, width = 512),
       // Count-Min replay: 4 md5-seeded hash rows x 512 cells, point-query
@@ -1133,7 +1134,7 @@ object TextQueries {
     // per-source top-10 distinctive terms by tf-idf (micro-nat idf,
     // exact integer scores, two-level sharded top-k)
     Q("q_t_tfidf", (s, dir) =>
-      graft.llm.Sketches.tfidfTopTerms(t(s, dir, "documents"), k = 10),
+      graft.llm.Sketches.tfidfTopTerms(Readers.table(s, dir, "documents"), k = 10),
       // tf-idf replay: micro-nat idf over ln(N/df), integer scores,
       // per-source row_number top-10 (the Spark side's two-level shard
       // top-k is exact, so the plain window reproduces it)
@@ -1164,7 +1165,7 @@ object TextQueries {
     // hashing-vectorizer document features: 64-dim hashed tf-idf,
     // milli-nat integer weights, CSV-joined for the compare
     Q("q_t_hash_vectors", (s, dir) =>
-      graft.llm.Sketches.hashedTfidfVectors(t(s, dir, "documents")),
+      graft.llm.Sketches.hashedTfidfVectors(Readers.table(s, dir, "documents")),
       // hashing-vectorizer replay: milli-nat idf, md5 bucket mod 64,
       // sparse sums densified by a range cross join, ordered list join
       """WITH toks AS (SELECT doc_id, list_filter(
@@ -1195,7 +1196,7 @@ object TextQueries {
     // probe-set text similarity over those features: exact integer
     // sparse dot products, two-level shard top-5, self excluded
     Q("q_t_text_knn", (s, dir) =>
-      graft.llm.Sketches.textKnnByTfidf(t(s, dir, "documents"),
+      graft.llm.Sketches.textKnnByTfidf(Readers.table(s, dir, "documents"),
         col("doc_id") < 20, k = 5),
       // sparse integer dot-product knn over the hashed features
       """WITH toks AS (SELECT doc_id, list_filter(
@@ -1230,7 +1231,7 @@ object TextQueries {
     // top-20 bigram collocations by PMI over the bigram-event space
     // (micro-nat quantized, TakeOrdered top-k - no global window)
     Q("q_t_pmi", (s, dir) =>
-      graft.llm.Sketches.pmiCollocations(t(s, dir, "documents"),
+      graft.llm.Sketches.pmiCollocations(Readers.table(s, dir, "documents"),
         minCount = 5L, k = 20),
       // PMI replay: bigram-event marginals, micro-nat ln, top-20 under
       // (pmi desc, prev, w)
@@ -1261,7 +1262,7 @@ object TextQueries {
     // MOSS winnowing fingerprints: leftmost-min of each w-window of
     // word-4-gram md5 hashes; in-array HOFs, no shuffle
     Q("q_t_winnow", (s, dir) =>
-      graft.llm.Dedup.winnowFingerprints(t(s, dir, "documents"),
+      graft.llm.Dedup.winnowFingerprints(Readers.table(s, dir, "documents"),
         k = 4, w = 4),
       // winnowing replay: 60-bit md5-prefix gram hashes, leftmost-min
       // window selection, distinct selected positions
@@ -1285,7 +1286,7 @@ object TextQueries {
     // token-window chunking with overlap (64/8): the embedding /
     // retrieval prep slicing; map-only explode, no shuffle
     Q("q_t_chunks", (s, dir) =>
-      graft.llm.Chunking.chunkDocuments(t(s, dir, "documents"),
+      graft.llm.Chunking.chunkDocuments(Readers.table(s, dir, "documents"),
         chunkSize = 64, overlap = 8),
       // 64/8 token-window chunking: range() strides, 1-based inclusive
       // list slices; a trailing window adding no new tokens is not emitted
@@ -1310,7 +1311,7 @@ object TextQueries {
     // curation funnel: per-(source, first-failing-stage) doc and token
     // accounting over the quality filter - "where did my corpus go"
     Q("q_t_funnel", (s, dir) =>
-      TextAnalysis.curationFunnel(t(s, dir, "documents")),
+      TextAnalysis.curationFunnel(Readers.table(s, dir, "documents")),
       // the q_t_filter verdict chain aggregated to the per-(source,
       // outcome) funnel with within-stratum shares
       """WITH f AS (
@@ -1422,7 +1423,7 @@ object TextQueries {
 
     // per-source language mixture from the langid classifier
     Q("q_t_lang_report", (s, dir) =>
-      TextAnalysis.sourceLangReport(t(s, dir, "documents")),
+      TextAnalysis.sourceLangReport(Readers.table(s, dir, "documents")),
       // the q_t_langid classifier aggregated to the (source, lang) mixture
       """WITH cls AS (
            SELECT source,
@@ -1453,7 +1454,7 @@ object TextQueries {
 
     // corpus bigram top-k under a total order (count desc, bigram asc)
     Q("q_t_bigrams", (s, dir) =>
-      TextAnalysis.topBigrams(t(s, dir, "documents"), 20),
+      TextAnalysis.topBigrams(Readers.table(s, dir, "documents"), 20),
       """WITH w AS (SELECT list_filter(
              string_split_regex(lower(trim(text)), '\s+'), x -> x <> '')
              AS ws
@@ -1467,7 +1468,7 @@ object TextQueries {
     // BPE tokenizer-training step: adjacent char-pair counts over the
     // word-frequency table, top-k merge candidates under a total order
     Q("q_t_bpe_pairs", (s, dir) =>
-      TextAnalysis.bpePairCounts(t(s, dir, "documents"), 100),
+      TextAnalysis.bpePairCounts(Readers.table(s, dir, "documents"), 100),
       // BPE pair-count step: word-frequency table first, then adjacent
       // char pairs of each DISTINCT word weighted by frequency; substr
       // in both engines is codepoint-based so pairs agree byte-for-byte
@@ -1513,7 +1514,7 @@ object TextQueries {
     // scale path a shipped ~30k-rule tokenizer artifact needs); DuckDB
     // replays the same replace chain literally
     Q("q_t_bpe_encode_big", (s, dir) =>
-      TextAnalysis.bpeEncode(t(s, dir, "documents"), bigBpeMerges)
+      TextAnalysis.bpeEncode(Readers.table(s, dir, "documents"), bigBpeMerges)
         .select(col("doc_id"), col("n_tokens"),
           array_join(transform(col("token_ids"), i => i.cast("string")), ",")
             .as("token_csv")),
@@ -1525,7 +1526,7 @@ object TextQueries {
     // the apply path for a real shipped byte-level tokenizer artifact;
     // the native BpeSegment byte mode is the only per-word work
     Q("q_t_byte_bpe", (s, dir) =>
-      graft.llm.ByteBpe.encode(t(s, dir, "documents"), byteBpeMerges)
+      graft.llm.ByteBpe.encode(Readers.table(s, dir, "documents"), byteBpeMerges)
         .select(col("doc_id"), col("n_tokens"),
           array_join(transform(col("token_ids"), i => i.cast("string")), ",")
             .as("token_csv")),
@@ -1536,7 +1537,7 @@ object TextQueries {
     // whole-word [UNK] on any unmatched position; the native
     // WordpieceSegment expression is the only per-word work
     Q("q_t_wordpiece", (s, dir) =>
-      graft.llm.Wordpiece.encode(t(s, dir, "documents"), wordpieceVocab),
+      graft.llm.Wordpiece.encode(Readers.table(s, dir, "documents"), wordpieceVocab),
       wordpieceSql(wordpieceVocab)),
 
     // unigram-LM (SentencePiece-family) tokenizer application: Viterbi
@@ -1544,14 +1545,14 @@ object TextQueries {
     // vocabulary with single-code-point unk fallback; the native
     // UnigramSegment expression is the only per-word work
     Q("q_t_unigram", (s, dir) =>
-      graft.llm.Unigram.encode(t(s, dir, "documents"), unigramVocab),
+      graft.llm.Unigram.encode(Readers.table(s, dir, "documents"), unigramVocab),
       unigramSql(unigramVocab, graft.llm.Unigram.DefaultUnkCost)),
 
     // unigram-LM training: substring-count seeding, quantized-ln
     // costs, EM-style segment/recount/prune rounds; only model-sized
     // vocabularies ever reach the driver
     Q("q_t_unigram_train", (s, dir) =>
-      graft.llm.Unigram.train(t(s, dir, "documents"), rounds = 2,
+      graft.llm.Unigram.train(Readers.table(s, dir, "documents"), rounds = 2,
         maxPieceLen = 4, keepTop = 120),
       unigramTrainSql(4, 120, graft.llm.Unigram.DefaultUnkCost)),
 
@@ -1559,7 +1560,7 @@ object TextQueries {
     // apply/cuts/mode, middle moved behind sentinel tokens (PSM/SPM) -
     // map-only, no shuffle
     Q("q_t_fim", (s, dir) =>
-      graft.llm.Fim.fimTransform(t(s, dir, "documents"), rate = 0.5),
+      graft.llm.Fim.fimTransform(Readers.table(s, dir, "documents"), rate = 0.5),
       // FIM transform: md5 draws for apply/cuts/mode, list slices +
       // sentinel-token reassembly per mode
       """WITH d AS (SELECT doc_id, text, list_filter(
@@ -1602,7 +1603,7 @@ object TextQueries {
     Q("q_t_byte_bpe_train", (s, dir) =>
       // NOT tDocsPar (r17 A/B, same rejection as bpeMergesShared):
       // 1.55 -> 2.0 s solo - partial-agg fan-out beats map spread
-      graft.llm.ByteBpe.train(t(s, dir, "documents"), rounds = 6),
+      graft.llm.ByteBpe.train(Readers.table(s, dir, "documents"), rounds = 6),
       byteBpeTrainSql(6)),
 
     // byte-level encode -> DISTRIBUTED decode round trip over the WHOLE
@@ -1611,7 +1612,7 @@ object TextQueries {
     // hash compare (total-coverage pre-tokenization + byte fallback
     // make decode(encode(text)) == text an exact identity)
     Q("q_t_byte_roundtrip", (s, dir) => {
-      val enc = graft.llm.ByteBpe.encode(t(s, dir, "documents"), byteBpeMerges)
+      val enc = graft.llm.ByteBpe.encode(Readers.table(s, dir, "documents"), byteBpeMerges)
       graft.llm.ByteBpe.decode(enc, byteBpeMerges)
         .select(col("doc_id"), col("text_decoded").as("text"))
     },
@@ -1673,7 +1674,7 @@ object TextQueries {
     // best-5-docs-per-source curation by quality score (total order,
     // per-stratum window rank - no global sort)
     Q("q_t_curate", (s, dir) =>
-      TextAnalysis.curateTopK(t(s, dir, "documents"), 5),
+      TextAnalysis.curateTopK(Readers.table(s, dir, "documents"), 5),
       // per-source top-5 by the q_t_quality score formula; identical
       // per-row double arithmetic in both engines makes the ordering
       // engine-exact, and (score desc, doc_id asc) is a total order
@@ -1717,7 +1718,7 @@ object TextQueries {
          WHERE rank <= 5"""),
 
     Q("q_t_quality", (s, dir) =>
-      TextAnalysis.withQualityFeatures(t(s, dir, "documents"))
+      TextAnalysis.withQualityFeatures(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("n_words"), col("punct_ratio"),
           col("digit_ratio"), col("stopword_ratio")),
       """SELECT doc_id,
@@ -1736,7 +1737,7 @@ object TextQueries {
          FROM documents"""),
 
     Q("q_t_langid", (s, dir) =>
-      TextAnalysis.withLangId(t(s, dir, "documents"))
+      TextAnalysis.withLangId(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("lang_pred"),
           col("lang_score").cast("int").as("lang_score")),
       """SELECT doc_id,
@@ -1765,7 +1766,7 @@ object TextQueries {
              FROM documents))"""),
 
     Q("q_t_fingerprint", (s, dir) =>
-      TextAnalysis.withFingerprint(t(s, dir, "documents"))
+      TextAnalysis.withFingerprint(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("content_md5")),
       """SELECT doc_id,
              md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
@@ -1775,7 +1776,7 @@ object TextQueries {
     // Gopher-style repetition/boilerplate signals; the ratios are exact
     // small-integer divisions, bit-identical across engines
     Q("q_t_repetition", (s, dir) =>
-      TextAnalysis.withRepetitionSignals(t(s, dir, "documents"))
+      TextAnalysis.withRepetitionSignals(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("n_lines"), col("dup_line_ratio"),
           col("dup_word_ratio"), col("bullet_line_ratio"),
           col("ellipsis_line_ratio")),
@@ -1809,7 +1810,7 @@ object TextQueries {
 
     // PII/URL scrub: typed placeholders + per-kind counts
     Q("q_t_scrub", (s, dir) =>
-      TextAnalysis.withScrubbedText(t(s, dir, "documents"))
+      TextAnalysis.withScrubbedText(Readers.table(s, dir, "documents"))
         .select(col("doc_id"), col("n_urls"), col("n_emails"),
           col("n_ips"), col("scrubbed")),
       // scrub: counts taken on the progressively-scrubbed text, like the
@@ -1837,7 +1838,7 @@ object TextQueries {
          FROM s2"""),
 
     Q("q_t_tokens", (s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
+      Readers.table(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.wordCount(col("text")).as("n_ws_tokens"),
         TextAnalysis.tokenCountBpeIsh(col("text")).as("n_bpe_tokens")),
       """SELECT doc_id,

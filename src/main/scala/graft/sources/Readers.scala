@@ -17,6 +17,14 @@ import graft.functions.Exprs
   */
 object Readers {
 
+  /** An sfDir table, `<dir>/<name>.parquet`, read with its declared
+    * schema (`Schemas.sfTables`). The one place graft reads those
+    * tables: a declared schema plans without the footer-reading job
+    * that inference starts, so a read costs the same whatever ran
+    * earlier in the JVM. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(Schemas.sfTable(name)).parquet(s"$dir/$name.parquet")
+
   /** HCOP 16-column file scan (S2) + taxon filter (F1) + projection to
     * relation records (F4). Output schema matches OrthologRelation minus
     * the yet-unresolved rgd ids.

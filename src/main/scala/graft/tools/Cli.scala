@@ -132,7 +132,7 @@ object Cli {
         System.err.println("ERROR: --bpeSave/--bpeLoad run standalone")
         return -1
       }
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Readers.table(spark, sfDir, "documents")
       bpeSaveDir match {
         case Some(dir) =>
           val (nRules, nVocab) =
@@ -176,11 +176,14 @@ object Cli {
     val speciesTypeKey = speciesArg.map(Species.parse).getOrElse(Species.ALL)
 
     // S2/F1/F2/D4: per-species relation source - real TSV files when
-    // given, otherwise the TPC-H-derived fixture frames
+    // given, otherwise the TPC-H-derived fixture frames. The fixture
+    // holds human<->rat relations only, so another species gets none
+    // of them (as the TSV readers' taxon filters would give it none).
     def relationsFor(sp: Int): DataFrame = (hcopPath, ncbiPath) match {
       case (Some(h), Some(n)) => Readers.requireSanityFloor(
         Readers.readHcopPlusNcbi(spark, h, n, sp), sanityFloor)
       case _ => Fixtures.relations(spark, sfDir)
+        .filter(org.apache.spark.sql.functions.col("destSpeciesTypeKey") === sp)
     }
 
     if (runForAll) {

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Readers
 
 /** Scaling-evidence data generator: expands an sf directory by an
   * integer factor, preserving the schema, referential integrity, and
@@ -48,13 +49,6 @@ object ScaleGen {
     val spark = graft.LocalSession("graft-scalegen")
     new java.io.File(out).mkdirs()
 
-    def read(name: String): DataFrame =
-      if (name == "events")
-        spark.read.schema("event_id LONG, user_id LONG, event_type STRING, " +
-            "value DOUBLE, props STRING")
-          .parquet(s"$src/$name.parquet")
-      else spark.read.parquet(s"$src/$name.parquet")
-
     /** write as a single `<out>/<name>.parquet` FILE (testdata layout) */
     def writeOne(df: DataFrame, name: String): Unit = {
       val tmp = s"$out/_tmp_$name"
@@ -66,21 +60,21 @@ object ScaleGen {
       if (dest.exists()) dest.delete()
       java.nio.file.Files.move(part.toPath, dest.toPath)
       scala.reflect.io.Path(tmp).deleteRecursively()
-      println(s"SCALEGEN $name rows=${spark.read.parquet(dest.toString).count()}")
+      println(s"SCALEGEN $name rows=${Readers.table(spark, out, name).count()}")
     }
 
     /** union `copies` copies, offsetting each long key column */
     def scaled(name: String, keyCols: Seq[String])
               (xform: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
       (0 until copies).map { c =>
-        val off = keyCols.foldLeft(read(name)) { (d, k) =>
+        val off = keyCols.foldLeft(Readers.table(spark, src, name)) { (d, k) =>
           d.withColumn(k, col(k) + lit(Stride * c)) }
         xform(off, c)
       }.reduce(_ unionByName _)
 
     // dimensions: one copy
-    writeOne(read("region"), "region")
-    writeOne(read("nation"), "nation")
+    writeOne(Readers.table(spark, src, "region"), "region")
+    writeOne(Readers.table(spark, src, "nation"), "nation")
     writeOne(scaled("customer", Seq("c_custkey"))(), "customer")
     writeOne(scaled("supplier", Seq("s_suppkey"))(), "supplier")
     writeOne(scaled("part", Seq("p_partkey"))(), "part")

@@ -26,7 +26,7 @@ object Smoke {
     // documents corpus contains printable ASCII + space ONLY. Enforce
     // the assumption instead of assuming it: any tab / newline /
     // non-ASCII character in any fixture document fails the smoke run.
-    val nonPrintable = spark.read.parquet(s"$dir/documents.parquet")
+    val nonPrintable = graft.sources.Readers.table(spark, dir, "documents")
       .where(org.apache.spark.sql.functions.col("text").isNotNull &&
         org.apache.spark.sql.functions.col("text").rlike("[^ -~]"))
       .count()
@@ -39,7 +39,7 @@ object Smoke {
     // (StreamingAnn.candidates scaladoc). Enforce the fixture property
     // here so a fixture change fails the smoke run with a named cause,
     // not a confusing downstream hash mismatch.
-    val nullAnnQueries = spark.read.parquet(s"$dir/embeddings.parquet")
+    val nullAnnQueries = graft.sources.Readers.table(spark, dir, "embeddings")
       .where(org.apache.spark.sql.functions.col("vec_id") < 5 &&
         org.apache.spark.sql.functions.col("embedding").isNull)
       .count()

@@ -1,6 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.model.Schemas
+import graft.sources.Readers
 
 /** Stagewise profile of the streaming family's fixed cost (guide §1:
   * measure first). For each profiled query shape this prints, per
@@ -56,7 +58,7 @@ object StreamProfile {
     // Datasets, so the difference fullBatch - sigsOnly isolates the
     // groupByKey shuffle + object conversion + state fold.
     profile("components") { () =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Readers.table(spark, dir, "documents")
       val t0 = System.nanoTime()
       val banded = graft.streaming.StreamingNearDup.bandedSigs(docs)
       banded.write.format("noop").mode("overwrite").save()
@@ -81,7 +83,7 @@ object StreamProfile {
 
     // ---- q_stream_neardup_mb shape (the family's most expensive) ----
     profile("neardup_mb") { () =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Readers.table(spark, dir, "documents")
       val mid = docs.agg(max(col("doc_id"))).first().getLong(0) / 2
       val tmp = java.nio.file.Files.createTempDirectory("sprof_mb").toString
       val t0 = System.nanoTime()
@@ -101,7 +103,7 @@ object StreamProfile {
       val tPrep = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val src = spark.readStream
-        .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+        .schema(Schemas.sfTable("documents"))
         .option("maxFilesPerTrigger", "1")
         .parquet(sdir)
       val banded = graft.streaming.StreamingNearDup.bandedSigs(src)
@@ -131,7 +133,7 @@ object StreamProfile {
     // ---- q_stream_dedup shape ----
     profile("dedup") { () =>
       val src = spark.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .schema(Schemas.sfTable("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
         .withColumn("ts",
@@ -162,7 +164,7 @@ object StreamProfile {
     // ---- q_stream_ann_mb shape: fixture prep vs start vs batches ----
     profile("ann_mb") { () =>
       val t0 = System.nanoTime()
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Readers.table(spark, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 5)
       val tmp = java.nio.file.Files.createTempDirectory("sprof_ann").toString
       def onePart(df: org.apache.spark.sql.DataFrame, sub: String, n: String): Unit = {
@@ -178,7 +180,7 @@ object StreamProfile {
       val t1 = System.nanoTime()
       val centroids = graft.llm.Ann.hyperplanes(64, 8, seed = 11L)
       val src = spark.readStream
-        .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
+        .schema(Schemas.sfTable("embeddings"))
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$tmp/src")
         .withColumnRenamed("vec_id", "q_id")
@@ -215,7 +217,7 @@ object StreamProfile {
         spark.conf.set(key, localMerge.toString)
         try {
           val src = spark.readStream
-            .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+            .schema(Schemas.sfTable("events"))
             .option("pathGlobFilter", "events.parquet")
             .parquet(dir)
             .withColumn("ts", timestamp_seconds(pmod(col("event_id"), lit(86400L))))
@@ -249,7 +251,7 @@ object StreamProfile {
     // ---- q_stream_sessions shape ----
     profile("sessions") { () =>
       val src = spark.readStream
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .schema(Schemas.sfTable("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir)
         .withColumn("ts", timestamp_seconds(pmod(col("event_id"), lit(86400L))))

@@ -74,6 +74,30 @@ class CliSpec extends SparkSpec {
     assert(!new java.io.File(s"$out/orthologs").isDirectory)
   }
 
+  test("--species all feeds the fixture relations to rat only: mouse " +
+      "leaves its input state as it was, rat writes what --species rat writes") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    // order-independent content hash: row count + sum of per-row xxhash64
+    def hash(df: DataFrame): (Seq[String], Long, BigDecimal) = {
+      val cols = df.columns.sorted.toSeq
+      val r = df.agg(count(lit(1)),
+        sum(xxhash64(cols.map(col): _*).cast("decimal(38,0)"))).head()
+      (cols, r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(0))
+    }
+    def state(dir: String, table: String) = hash(spark.read.parquet(s"$dir/$table"))
+    val all = tmp()
+    assert(Cli.run(Array("--species", "all", "--sfDir", sf, "--out", all), spark) == 0)
+    val rat = tmp()
+    assert(Cli.run(Array("--species", "rat", "--sfDir", sf, "--out", rat), spark) == 0)
+    // mouse runs first, over the fixture snapshot
+    val input = graft.pipeline.Fixtures.state(spark, sf)
+    assert(state(s"$all/mouse", "orthologs") == hash(input.orthologs))
+    assert(state(s"$all/mouse", "associations") == hash(input.associations))
+    for (table <- Seq("orthologs", "associations"))
+      assert(state(s"$all/rat", table) == state(s"$rat/rat", table), table)
+  }
+
   test("D5 gate: a tight --maxAgeDays fails the freshness check") {
     // fixture AGR lastUpdateDate is 2026-06-01; 'now' inside the CLI is
     // 2026-08-12 -> 72 days old -> a 10-day gate must throw
