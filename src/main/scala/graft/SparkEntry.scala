@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.registry.Registry
-import graft.registry.CoreQueries.pipelineResult
+import graft.registry.CoreQueries.pipelinePicks
 
 /** The engine's query surface: the flagship `entry` plus the query
   * registry. Each query is one [[graft.registry.Q]] (name, Spark plan,
@@ -10,11 +10,12 @@ import graft.registry.CoreQueries.pipelineResult
   * `queries` and `oracleSql` are name-keyed views of that one list. */
 object SparkEntry {
 
-  /** Flagship: the full --species pipeline (resolve -> group -> cascade ->
-    * merge -> weak sync) over ortholog-shaped fixtures derived from the
-    * sf0.001 test tables; returns the strong-ortholog picks. */
+  /** Flagship: the picks stage of the --species pipeline (resolve ->
+    * group -> complement -> cascade) over ortholog-shaped fixtures
+    * derived from the sf0.001 test tables; returns the strong-ortholog
+    * picks. */
   def entry(spark: SparkSession): DataFrame =
-    pipelineResult(spark, "/root/testdata/sf0.001").strongPicks
+    pipelinePicks(spark, "/root/testdata/sf0.001").strongPicks
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> q.plan).toMap

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN index-artifact persistence: IVF coarse centroids and PQ
@@ -65,9 +65,4 @@ object AnnArtifact {
         cb.groupBy(_._2).toSeq.sortBy(_._1)
           .map { case (_, rows) => rows.sortBy(_._3).map(_._4) } }
   }
-
-  /** The centroid table as a DataFrame (for joins / inspection without
-    * collecting - e.g. auditing drift between two shipped indexes). */
-  def centroidsTable(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/centroids")
 }

@@ -862,7 +862,6 @@ object Dedup {
     * distinct, and anti-joined on that uniformly-distributed key (a
     * shuffle whose payload is hashes only, never reference text). */
   def dedupAgainstReference(corpus: DataFrame, reference: DataFrame,
-                            idCol: String = "doc_id",
                             textCol: String = "text"): DataFrame = {
     val refHashes = reference.select(normMd5(col(textCol)).as("norm_md5")).distinct()
     corpus.withColumn("norm_md5", normMd5(col(textCol)))

@@ -1,6 +1,5 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Data model for the ortholog analytics engine.
@@ -100,13 +99,6 @@ object Species {
     (11, "roundworm", 6239, "Caenorhabditis elegans"),
     (12, "yeast", 559292, "Saccharomyces cerevisiae")
   )
-
-  /** Species dimension as a DataFrame - small enough that Catalyst always
-    * broadcasts it (X13: taxon <-> species-key joins). */
-  def dimDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    dim.toDF("species_type_key", "common_name", "taxon_id", "taxonomic_name")
-  }
 
   def taxonId(speciesTypeKey: Int): Int =
     dim.find(_._1 == speciesTypeKey).map(_._3)

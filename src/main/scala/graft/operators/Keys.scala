@@ -34,9 +34,10 @@ import org.apache.spark.sql.functions._
   * the pin follows ShardedPrefixSum's one rule - the innermost open
   * ShardedPrefixSum.scoped call releases it on exit, never earlier, so
   * a key product compiled late inside that scope still reads its pin.
-  * The pipeline runs consume each key product at a phase boundary
-  * inside their own scope (sequential runs hold no pins between runs);
-  * a registry query's graft.Scope opens one around the whole query.
+  * OrthologPipeline.runSpecies and AgrPipeline.run each open one scope
+  * around the whole run and consume each key product at a phase write
+  * inside it (sequential runs hold no pins between runs); a registry
+  * query's graft.Scope opens one around the whole query.
   * A release that drops a never-materialized pin warns and counts.
   * With no scope open the pin is an ordinary persist the caller owns.
   */

@@ -98,8 +98,8 @@ object Merge {
     * inserted audit and the post-merge state read the SAME materialized
     * keys instead of each recomputing the key join, and (b) CONSUMES
     * the surrogate-key pin (see operators.Keys) inside the run, so the
-    * caller's pin scope (ShardedPrefixSum.scoped) can release it on
-    * return. The default identity keeps the fully lazy operator
+    * pin scope that OrthologPipeline.runSpecies opens around the whole
+    * run releases it on return. The default identity keeps the fully lazy operator
     * semantics for direct callers (specs, the registry's q_m1_reconcile)
     * - their pin lives until the innermost open pin scope exits (for a
     * registry query, its graft.Scope), consumed within it by

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Agr, Keys}
-import graft.model.Species
 
 /** The --agrOrthologs flow as one pure batch transformation.
   *
@@ -11,32 +10,28 @@ import graft.model.Species
   * curies of every line via the M5 cascade, upsert into AGR_ORTHOLOGS
   * (S9), then wrap up - stale delete behind the A8 threshold guard and
   * the M6 curie QC sweep. The reference's parallel stream + retry loop
-  * disappears: resolution is a join, the upsert a keyed merge.
+  * disappears: resolution is a join, the upsert a keyed merge. [[run]]
+  * returns once its three phases (`agr_resolved`, `agr_upserted`,
+  * `agr_new_xrefs`) are written, as the reference saves each new curie
+  * binding while it resolves it (AgrTsvLoader.java:306-393).
   */
 object AgrPipeline {
 
-  /** [[xrefs]] is the new xref state: prior rows touched/swept by the
+  /** Products of one finished AGR run; every phase has been written
+    * before [[run]] returns.
+    *
+    * [[xrefs]] is the new xref state: prior rows touched/swept by the
     * M6 QC, PLUS one new AGR_GENE row per curie resolved outside the
     * map step (the reference persists the binding via
     * insertAgrGeneXdbId at resolution steps 2-4, so the NEXT run's map
-    * step hits directly). Computed ON FIRST ACCESS, same contract as
-    * [[OrthologPipeline.Result.associations]]: the new bindings carry
-    * surrogate keys whose assignment pins a shared range exchange, so
-    * the accessor phase-materializes them in its own pin scope -
-    * a caller that never reads xrefs (the benched pair queries) never
-    * pays for the branch.
+    * step hits directly).
     *
     * [[newGenes]]: gene-dimension rows synthesized for unresolvable
     * non-human/mouse/rat curies (insertAgrGene creates the gene + an
     * ACTIVE rgd id, OrthologRelationDao.java:621-642). */
-  final class Result(val agrOrthologs: DataFrame,
-                     xrefsThunk: () => DataFrame,
-                     val unresolved: DataFrame, val guardOk: Boolean,
-                     val resolutionStats: DataFrame,
-                     val newGenes: DataFrame) {
-    /** New xref state, phase-materialized at first access. */
-    lazy val xrefs: DataFrame = xrefsThunk()
-  }
+  final case class Result(agrOrthologs: DataFrame, xrefs: DataFrame,
+                          unresolved: DataFrame, guardOk: Boolean,
+                          resolutionStats: DataFrame, newGenes: DataFrame)
 
   /** @param lines   Readers.readAlliance output
     * @param cutoff  stale cutoff = runTs - 1h in the reference (X9 clock
@@ -56,9 +51,10 @@ object AgrPipeline {
           maxExistingRgdId: Int = 0,
           phases: OrthologPipeline.PhaseStore =
             OrthologPipeline.InProcessPhases): Result =
-    // the new-gene rgd-id keys pin a shared exchange until the
-    // agr_resolved phase write below consumes them; the scope releases
-    // the pin on return (O(1) live pins across sequential runs)
+    // the surrogate-key pins of this run (the new-gene rgd ids, the new
+    // xref keys) are consumed by its own phase writes ("agr_resolved",
+    // "agr_new_xrefs"); the scope releases them on return (O(1) live
+    // pins across sequential runs)
     graft.operators.ShardedPrefixSum.scoped {
       runBody(lines, agrState, xrefs, genes, rgdIds, runTs, cutoff,
         deleteThreshold, maxExistingRgdId, phases)
@@ -139,35 +135,31 @@ object AgrPipeline {
       .select(col("rgdId"), col("geneSymbol"), col("speciesTypeKey"),
         lit("ACTIVE").as("objectStatus"))
 
-    // M5 writes + M6 QC, deferred to first access (Result scaladoc).
-    // New bindings: every curie resolved OUTSIDE the map step gets an
-    // AGR_GENE xref binding it to its gene (insertAgrGeneXdbId at
-    // resolution steps 2-4, AgrTsvLoader.java:306-393 +
-    // OrthologRelationDao.java:644-652) so the next run's map step hits
-    // directly. Distinct on (rgdId, accId): the reference re-inserts
-    // per line occurrence, which is set-wise one binding. Surrogate
-    // accXdbKeys above the current max; the accessor's phase write
-    // consumes the key pin inside its own pin scope. QC: touch seen
-    // AGR_GENE xrefs, sweep stale ones; the newly inserted bindings
-    // carry runTs and ride through un-swept.
+    // M5 writes + M6 QC. New bindings: every curie resolved OUTSIDE the
+    // map step gets an AGR_GENE xref binding it to its gene
+    // (insertAgrGeneXdbId at resolution steps 2-4,
+    // AgrTsvLoader.java:306-393 + OrthologRelationDao.java:644-652) so
+    // the next run's map step hits directly. Distinct on (rgdId, accId):
+    // the reference re-inserts per line occurrence, which is set-wise
+    // one binding. Surrogate accXdbKeys above the current max; the phase
+    // write consumes their pin. QC: touch seen AGR_GENE xrefs, sweep
+    // stale ones; the newly inserted bindings carry runTs and ride
+    // through un-swept.
     val seen = resolved.filter(col("rgdId").isNotNull).select(col("curie"))
-    def newXrefs(): DataFrame =
-      graft.operators.ShardedPrefixSum.scoped {
-        val newXrefRows = phases("agr_new_xrefs", Seq("accXdbKey"),
-          Keys.assignSequentialFrom(
-            resolved.filter(col("how").isin("specialId", "symbol", "insert"))
-              .select(col("rgdId"), col("curie").as("accId")).distinct(),
-            "accXdbKey",
-            xrefs.agg(coalesce(max(col("accXdbKey")), lit(0L))),
-            Seq(col("accId"), col("rgdId")))
-          .select(col("accXdbKey"), col("rgdId"),
-            lit(graft.model.XdbKeys.AGR_GENE).as("xdbKey"), col("accId"),
-            lit("AgrOrtholog").as("srcPipeline"),
-            lit(runTs).as("modificationDate")))
-        Agr.qcCuries(xrefs, seen, cutoff, runTs).unionByName(newXrefRows)
-      }
+    val newXrefRows = phases("agr_new_xrefs", Seq("accXdbKey"),
+      Keys.assignSequentialFrom(
+        resolved.filter(col("how").isin("specialId", "symbol", "insert"))
+          .select(col("rgdId"), col("curie").as("accId")).distinct(),
+        "accXdbKey",
+        xrefs.agg(coalesce(max(col("accXdbKey")), lit(0L))),
+        Seq(col("accId"), col("rgdId")))
+      .select(col("accXdbKey"), col("rgdId"),
+        lit(graft.model.XdbKeys.AGR_GENE).as("xdbKey"), col("accId"),
+        lit("AgrOrtholog").as("srcPipeline"),
+        lit(runTs).as("modificationDate")))
 
-    new Result(finalState, () => newXrefs(), unresolved, guardOk, stats,
-      newGenes)
+    Result(finalState,
+      Agr.qcCuries(xrefs, seen, cutoff, runTs).unionByName(newXrefRows),
+      unresolved, guardOk, stats, newGenes)
   }
 }

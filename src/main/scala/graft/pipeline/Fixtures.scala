@@ -170,7 +170,7 @@ object Fixtures {
       lit(true).as("isBestRevScore"))
   }
 
-  def associations(spark: SparkSession, dir: String): DataFrame = {
+  def associations(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     // planted prior-state rows: the S6 sync scope must carry (a) an
@@ -204,7 +204,7 @@ object Fixtures {
   def state(spark: SparkSession, dir: String): OrthologPipeline.State =
     OrthologPipeline.State(
       orthologs = orthologs(spark, dir),
-      associations = associations(spark, dir),
+      associations = associations(spark),
       agrOrthologs = agrOrthologs(spark, dir),
       xrefs = xrefs(spark, dir),
       genes = genes(spark, dir),

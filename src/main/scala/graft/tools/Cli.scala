@@ -168,6 +168,9 @@ object Cli {
       val r = AgrPipeline.run(lines,
         st.agrOrthologs, st.xrefs, st.genes, st.rgdIds, runTs, cutoff)
       write(r.agrOrthologs, s"$out/agr_orthologs")
+      // the new curie bindings, which the reference persists as it
+      // resolves them (insertAgrGeneXdbId, OrthologRelationDao.java:644-652)
+      write(r.xrefs, s"$out/xrefs")
       println(s"AGR_ORTHOLOGS=${r.agrOrthologs.count()}")
       return 0
     }
@@ -199,7 +202,7 @@ object Cli {
       var cur = st
       searchableNonHuman.foreach { sp =>
         val (orthPath, assocPath) =
-          runSpecies(spark, out, cur, sp, runTs, relationsFor(sp))
+          runSpecies(out, cur, sp, runTs, relationsFor(sp))
         cur = cur.copy(orthologs = spark.read.parquet(orthPath),
           associations = spark.read.parquet(assocPath))
       }
@@ -222,7 +225,7 @@ object Cli {
       println(s"FIXED_ORTHOLOGS=${updOrtho.count()} FIXED_ASSOCS=${updAssoc.count()}")
     } else {
       Reports.checkAllianceFreshness(st.agrOrthologs, now, maxAgeDays)
-      runSpecies(spark, out, st, speciesTypeKey, runTs, relationsFor(speciesTypeKey))
+      runSpecies(out, st, speciesTypeKey, runTs, relationsFor(speciesTypeKey))
     }
     0
   }
@@ -237,7 +240,7 @@ object Cli {
   /** One species load: run the pipeline, persist the new state, report
     * the X11 count diff. Returns the written (orthologs, associations)
     * paths so the all-species loop can thread the evolving state. */
-  private def runSpecies(spark: SparkSession, out: String,
+  private def runSpecies(out: String,
                          st: OrthologPipeline.State, speciesTypeKey: Int,
                          runTs: java.sql.Timestamp,
                          rel: DataFrame): (String, String) = {

@@ -20,7 +20,7 @@ object PlanAudit {
       "q_j1_resolution",  // outer join + agg
       "q_a1_groupagg",    // partial aggregation
       "q_w4_cascade",     // window chain
-      "q_d_minhash_pairs",// LSH self-join
+      "q_d_minhash_pairs",// LSH self-join: md5 4x4 banding + est-free verify
       "q_ann_neardup",    // bucket join
       "q_m1_reconcile",   // full-outer classify + W3 windows + seq keys
       "q_w24_cascade_run",// real cascade: 3 chained hash aggs
@@ -65,7 +65,6 @@ object PlanAudit {
       "q_t_length_hist",  // single hash aggregate
       "q_pack_export",    // pack chain + partitioned write round trip
       "q_t_bpe_encode_big", // native BpeSegment path (>64 rules)
-      "q_d_minhash_pairs",// md5 4x4 banding + est-free verify
       "q_t_repeated_spans", // gram positions + island-merge window
       "q_sk_hll",         // register sketch: one map-side-combined agg
       "q_sk_cms",         // vocab collapse + depth explode + cell agg

@@ -128,7 +128,7 @@ object Smoke {
     }
     if (bnljWhitelist(name)) Nil
     else flatten(plan).flatMap {
-      case c: CartesianProductExec =>
+      case _: CartesianProductExec =>
         Seq(s"$name: CartesianProduct in plan")
       case b: BroadcastNestedLoopJoinExec =>
         val build = b.buildSide match {

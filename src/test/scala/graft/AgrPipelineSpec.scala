@@ -170,4 +170,11 @@ class AgrPipelineSpec extends SparkSpec {
       rows(inProc.unresolved.select("curie")))
     assert(bucketed.guardOk == inProc.guardOk)
   }
+
+  test("AgrPipeline.run writes all three phases before it returns") {
+    val rec = new RecordingPhases
+    AgrPipeline.run(lines, agrState, xrefs, genes, rgdIds, runTs, cutoff,
+      deleteThreshold = "500", phases = rec)
+    assert(rec.names == Seq("agr_resolved", "agr_upserted", "agr_new_xrefs"))
+  }
 }

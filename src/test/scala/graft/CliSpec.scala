@@ -40,6 +40,50 @@ class CliSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/agr_orthologs").count() > 0)
   }
 
+  test("--agrOrthologs writes the xref state: every input xref plus one " +
+      "AGR_GENE binding per curie resolved outside the map step") {
+    import org.apache.spark.sql.functions._
+    val out = tmp()
+    assert(Cli.run(Array("--agrOrthologs", "--sfDir", sf, "--out", out),
+      spark) == 0)
+    val st = graft.pipeline.Fixtures.state(spark, sf)
+    def keys(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("accXdbKey").collect().map(_.getLong(0)).toSet
+    val written = spark.read.parquet(s"$out/xrefs")
+    val inKeys = keys(st.xrefs)
+    assert(inKeys.subsetOf(keys(written)))
+    val added = written.join(st.xrefs.select("accXdbKey"), Seq("accXdbKey"),
+      "left_anti")
+    // what the run resolves: the lines' curies through the M5 cascade
+    val lines = graft.pipeline.Fixtures.allianceLines(spark, sf)
+    val curies = Seq("1", "2").map(i => lines.select(col(s"curie$i").as("curie"),
+        col(s"geneSymbol$i").as("geneSymbol"),
+        col(s"speciesTypeKey$i").as("speciesTypeKey")))
+      .reduce(_ unionByName _).distinct()
+    val resolved = graft.operators.Agr.resolveCuries(curies, st.xrefs,
+      st.genes, st.rgdIds)
+    // specialId/symbol bind an existing gene; an insert binds a new one
+    // (a fresh rgd id per resolved row, so each is its own pair)
+    val bound = resolved.filter(col("how").isin("specialId", "symbol"))
+      .select(col("curie"), col("rgdId")).distinct()
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    val inserted = resolved.filter(col("how") === "insert")
+      .select("curie").collect().map(_.getString(0)).toSeq
+    val addedRows = added.select("accId", "rgdId", "xdbKey", "srcPipeline")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3)))
+    assert(addedRows.nonEmpty)
+    assert(addedRows.length == bound.size + inserted.length)
+    assert(addedRows.forall(r => r._3 == graft.model.XdbKeys.AGR_GENE &&
+      r._4 == "AgrOrtholog"))
+    assert(addedRows.map(r => (r._1, r._2)).toSet.size == addedRows.length)
+    assert(bound.subsetOf(addedRows.map(r => (r._1, r._2)).toSet))
+    assert(addedRows.map(_._1).sorted.toSeq ==
+      (bound.toSeq.map(_._1) ++ inserted).sorted)
+    assert(written.count() == inKeys.size + addedRows.length)
+    // the new keys continue above the input's max key
+    assert(keys(added).min > inKeys.max)
+  }
+
   test("--fixXRefDataSet rewrites state in place") {
     val out = tmp()
     assert(Cli.run(Array("--species", "rat", "--fixXRefDataSet",

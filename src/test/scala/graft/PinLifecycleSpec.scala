@@ -72,8 +72,8 @@ class PinLifecycleSpec extends SparkSpec {
       "a pipeline run released a pin whose product never materialized")
   }
 
-  test("the lazily-built association state materializes through its own " +
-    "scope: no pin outlives the access, keys are stable across accesses") {
+  test("a finished run's association state holds no pin after the run " +
+    "or its reads, and its keys are stable across reads") {
     val pins0 = livePins
     val unmat0 = ShardedPrefixSum.unmaterializedReleases
     val r = OrthologPipeline.runSpecies(relations, state, Species.RAT, runTs)
@@ -81,8 +81,8 @@ class PinLifecycleSpec extends SparkSpec {
     val first = r.associations.select("assocKey", "masterRgdId", "detailRgdId")
       .collect().map(_.toSeq).toSet
     assert(first.nonEmpty)
-    assert(livePins == pins0, "association access left a live pin behind")
-    // second access reads the memoized store-backed frame - same keys
+    assert(livePins == pins0, "an association read left a live pin behind")
+    // a second read of the phase-backed frame gives the same keys
     val second = r.associations.select("assocKey", "masterRgdId", "detailRgdId")
       .collect().map(_.toSeq).toSet
     assert(first == second)

@@ -181,8 +181,8 @@ class PipelineSpec extends SparkSpec {
     // is a durability/topology choice: picks, final ortholog state, and
     // final association state must be set-identical either way. This is
     // the invariant that makes the bucketed bench representative - and
-    // it exercises the lazily-consumed association branch (surrogate
-    // keys ride the cap-exempt prefix-sum pin) through BOTH stores.
+    // it exercises the association phase (its surrogate keys ride a
+    // prefix-sum pin) through BOTH stores.
     val inProc = OrthologPipeline.runSpecies(relations, state, Species.RAT,
       runTs, phases = OrthologPipeline.InProcessPhases)
     val base = java.nio.file.Files
@@ -207,5 +207,38 @@ class PipelineSpec extends SparkSpec {
       "masterRgdId", "detailRgdId", "srcPipeline")
     assert(rows(bucketed.associations, assocCols: _*) ==
       rows(inProc.associations, assocCols: _*))
+    // and every reconcile/sync audit stream counts the same
+    for (k <- inProc.mergeAudit.keys)
+      assert(bucketed.mergeAudit(k).count() == inProc.mergeAudit(k).count(), k)
+  }
+
+  test("runSpecies writes all seven phases before it returns") {
+    val rec = new RecordingPhases
+    OrthologPipeline.runSpecies(relations, state, Species.RAT, runTs,
+      phases = rec)
+    assert(rec.names == Seq("relations", "picks", "inserted", "merged_state",
+      "downgraded", "orthologs", "associations"))
+  }
+
+  test("the picks stage alone gives the same strong picks as a full run, " +
+    "and writes only its own two phases") {
+    val rec = new RecordingPhases
+    val p = OrthologPipeline.picks(relations, state, rec)
+    assert(rec.names == Seq("relations", "picks"))
+    val r = OrthologPipeline.runSpecies(relations, state, Species.RAT, runTs)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(p.strongPicks).nonEmpty)
+    assert(rows(p.strongPicks) == rows(r.strongPicks))
+  }
+}
+
+/** A phase store that logs the name of each phase it writes, in order,
+  * and materializes like [[OrthologPipeline.InProcessPhases]]. */
+final class RecordingPhases extends OrthologPipeline.PhaseStore {
+  private val log = scala.collection.mutable.ArrayBuffer.empty[String]
+  def names: Seq[String] = log.toSeq
+  def apply(name: String, keys: Seq[String], df: DataFrame): DataFrame = {
+    log += name
+    OrthologPipeline.InProcessPhases(name, keys, df)
   }
 }
