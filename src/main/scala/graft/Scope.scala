@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.CachedData
 import graft.operators.ShardedPrefixSum
-import graft.pipeline.Memo
 import graft.registry.{Q, Registry}
 
 /** The lifecycle of one registry query, in one place.
@@ -19,11 +18,10 @@ import graft.registry.{Q, Registry}
   *     `blocking = true`;
   *   - temp views it created (the streaming queries' memory sinks).
   *
-  * The one exception is what the memo owns: what a [[Memo.once]] build
-  * made persistent, pins aside, outlives the scope and is released by
-  * [[Memo.clear]].
-  * So a query's cost depends on its own plan and on the memo, never on
-  * what its neighbours left behind.
+  * What a memo build made persistent goes too: a memoized value is
+  * driver data, a path or a frame rooted at files, so it needs none of
+  * it. So a query's cost depends on its own plan and on the memoized
+  * values, never on what its neighbours left behind.
   *
   * [[Scope.registry]] is the one loop over the registry that Bench, Verify
   * and Smoke share. A scope attributes to its query everything that
@@ -40,8 +38,6 @@ object Scope {
     // cache entries compare by identity: two entries never share a plan
     def --(o: Held): Held = Held(rdds -- o.rdds.keys,
       entries.filterNot(e => o.entries.exists(_ eq e)), views -- o.views)
-    def ++(o: Held): Held = Held(rdds ++ o.rdds,
-      entries ++ (o -- this).entries, views ++ o.views)
     def size: Int = rdds.size + entries.size + views.size
     /** The prefix-sum pins among the cache entries: the plans that output
       * [[ShardedPrefixSum.cumBefore]]'s shard column. */
@@ -83,15 +79,14 @@ object Scope {
     h.rdds.values.foreach(_.unpersist(blocking = true))
   }
 
-  /** Runs `body`, then releases what it left behind except what the memo
-    * owns. */
+  /** Runs `body`, then releases what it left behind. */
   def apply[T](spark: SparkSession)(body: => T): T = {
     val before = held(spark)
     var left = Held.empty
     try ShardedPrefixSum.scoped {
       // taken while the pins are still cached, so that the release
       // below blocks on their blocks too
-      try body finally left = held(spark) -- before -- Memo.owned(spark)
+      try body finally left = held(spark) -- before
     } finally release(spark, left)
   }
 

@@ -526,7 +526,7 @@ object Dedup {
                       shingleN: Int = 3, threshold: Double = 0.5,
                       maxBucketSize: Int = 1000): DataFrame =
     minhashMd5PairsImpl(df, idCol, textCol, k, bands, shingleN, threshold,
-      maxBucketSize, estMinAgree = 0)._1
+      maxBucketSize, estMinAgree = 0)
 
   /** Portable TWO-STAGE n-gram-Jaccard near-dup ([[ngramJaccardPairs]]'s
     * md5 twin): band-bucket candidates, a SIGNATURE-AGREEMENT estimate
@@ -543,39 +543,18 @@ object Dedup {
                            threshold: Double = 0.8, estMinAgree: Int = 4,
                            maxBucketSize: Int = 1000): DataFrame =
     minhashMd5PairsImpl(df, idCol, textCol, k, bands, shingleN, threshold,
-      maxBucketSize, estMinAgree)._1
-
-  /** [[minhashMd5Pairs]], materialized via localCheckpoint with the
-    * internal shingle cache released before returning. The lazy variant
-    * persists a shingle frame the caller holds no handle to, so it
-    * lives until a registry query's scope ends ([[graft.Scope]]) or the
-    * session stops. Use this variant
-    * when the pair list will be consumed more than once (the registry's
-    * session memo does): the eager checkpoint pins ONLY the O(pairs)
-    * result, and the O(corpus) shingle blocks are freed immediately. */
-  def minhashMd5PairsCheckpointed(df: DataFrame, idCol: String = "doc_id",
-                                  textCol: String = "text", k: Int = 16,
-                                  bands: Int = 8, shingleN: Int = 3,
-                                  threshold: Double = 0.5,
-                                  maxBucketSize: Int = 1000): DataFrame = {
-    val (pairs, withSh) = minhashMd5PairsImpl(df, idCol, textCol, k, bands,
-      shingleN, threshold, maxBucketSize, estMinAgree = 0)
-    try pairs.localCheckpoint() // eager: materializes before the finally
-    finally withSh.unpersist(blocking = false)
-  }
+      maxBucketSize, estMinAgree)
 
   private def minhashMd5PairsImpl(df: DataFrame, idCol: String,
                                   textCol: String, k: Int, bands: Int,
                                   shingleN: Int, threshold: Double,
                                   maxBucketSize: Int,
-                                  estMinAgree: Int): (DataFrame, DataFrame) = {
+                                  estMinAgree: Int): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val rows = k / bands
     // persisted: three consumers (signature build + both verify joins)
     // would each re-run the scan and shingle pass otherwise. Released
-    // with the registry query's scope, as in [[removeBoilerplateChunks]]
-    // - prefer [[minhashMd5PairsCheckpointed]] when the result outlives
-    // the call.
+    // with the registry query's scope, as in [[removeBoilerplateChunks]].
     val withSh = df.select(col(idCol).as("id"),
       shingles(col(textCol), shingleN).as("sh"))
       .persist()
@@ -621,7 +600,7 @@ object Dedup {
       .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard")) -> withSh
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Bottom-k sketch pairs with ASYMMETRIC containment estimates - the

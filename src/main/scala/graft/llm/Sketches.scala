@@ -56,15 +56,8 @@ object Sketches {
 
   // ---------------------------------------------------------------- HLL
 
-  /** Per-stratum HyperLogLog registers: (stratum, bucket, m_j) where
-    * bucket = top `p` bits of h60(value) and m_j = max over values of
-    * rho (1 + leading-zero count of the remaining `60-p` bits).
-    * At most `2^p` rows per stratum; merge two register frames with
-    * `groupBy(stratum, bucket).agg(max(m_j))`. */
-  /** The (bucket, rho) column pair for one value under precision `p` -
-    * exposed so streaming twins (windowed sketches) share the exact
-    * register definition with the batch path. */
-  def hllBucketRho(value: Column, p: Int): (Column, Column) = {
+  /** The (bucket, rho) column pair for one value under precision `p`. */
+  private def hllBucketRho(value: Column, p: Int): (Column, Column) = {
     require(p >= 4 && p <= 16, s"p in [4,16]: $p")
     val rem = 60 - p // bits left after the bucket index
     val h = h60(value)
@@ -74,6 +67,11 @@ object Sketches {
         .otherwise(lit(rem + 1) - length(bin(remBits))))
   }
 
+  /** Per-stratum HyperLogLog registers: (stratum, bucket, m_j) where
+    * bucket = top `p` bits of h60(value) and m_j = max over values of
+    * rho (1 + leading-zero count of the remaining `60-p` bits).
+    * At most `2^p` rows per stratum; merge two register frames with
+    * `groupBy(stratum, bucket).agg(max(m_j))`. */
   def hllRegisters(df: DataFrame, strataCol: String, value: Column,
                    p: Int = 10): DataFrame = {
     val (bucket, rho) = hllBucketRho(value, p)

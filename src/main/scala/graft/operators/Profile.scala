@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Single-pass column profiling: row/null/distinct counts, range, and
@@ -9,27 +9,30 @@ import org.apache.spark.sql.functions._
   *
   * All statistics for all columns are computed in ONE aggregation over
   * the table - a single scan, partial aggregation map-side - and the
-  * wide 1-row result is unpivoted driver-free with explode. The exact
-  * and approximate variants share one plan builder, so their shape and
-  * output schema cannot drift: only the two aggregate functions differ.
+  * wide 1-row result is unpivoted driver-free with explode.
   */
 object Profile {
 
-  private def profile(df: DataFrame, numericCols: Seq[String],
-                      distinctAgg: Column => Column,
-                      pctAgg: (Column, Double) => Column): DataFrame = {
+  /** Exact profile via `countDistinct`/`percentile` - SMALL-FRAME path
+    * only. `percentile` is an ObjectHashAggregate whose buffer holds a
+    * value->count map per column, merged on one final reducer: linear
+    * but with a huge constant and OOM-bait on high-cardinality columns.
+    * Kept for narrow frames and as the semantics reference;
+    * [[summarizeDistributed]] is the benched/scale path and returns the
+    * same rows bit-for-bit for integer-valued columns. */
+  def summarize(df: DataFrame, numericCols: Seq[String]): DataFrame = {
     require(numericCols.nonEmpty, "no columns to profile")
     val aggs = numericCols.flatMap { c =>
       val d = col(c).cast("double")
       Seq(
         count(lit(1)).as(s"${c}__n"),
         count(col(c)).as(s"${c}__nn"),
-        distinctAgg(col(c)).as(s"${c}__nd"),
+        countDistinct(col(c)).as(s"${c}__nd"),
         min(d).as(s"${c}__min"),
         max(d).as(s"${c}__max"),
-        pctAgg(d, 0.25).as(s"${c}__p25"),
-        pctAgg(d, 0.5).as(s"${c}__p50"),
-        pctAgg(d, 0.75).as(s"${c}__p75"))
+        percentile(d, lit(0.25)).as(s"${c}__p25"),
+        percentile(d, lit(0.5)).as(s"${c}__p50"),
+        percentile(d, lit(0.75)).as(s"${c}__p75"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
     val entries = array(numericCols.map { c =>
@@ -46,17 +49,6 @@ object Profile {
     }: _*)
     one.select(explode(entries).as("p")).select(col("p.*"))
   }
-
-  /** Exact profile via `countDistinct`/`percentile` - SMALL-FRAME path
-    * only. `percentile` is an ObjectHashAggregate whose buffer holds a
-    * value->count map per column, merged on one final reducer: linear
-    * but with a huge constant and OOM-bait on high-cardinality columns.
-    * Kept for narrow frames and as the semantics reference;
-    * [[summarizeDistributed]] is the benched/scale path and returns the
-    * same rows bit-for-bit for integer-valued columns. */
-  def summarize(df: DataFrame, numericCols: Seq[String]): DataFrame =
-    profile(df, numericCols, c => countDistinct(c),
-      (d, p) => percentile(d, lit(p)))
 
   /** Distributed EXACT profile - the 100 TB exact path. Same output
     * schema and the same values as [[summarize]] for columns whose
@@ -137,21 +129,4 @@ object Profile {
         col("n_distinct"), col("min_v"), col("max_v"),
         col("p25"), col("p50"), col("p75"))
   }
-
-  /** The 100 TB path: identical plan shape and output schema, with
-    * sketches in place of the exact aggregates - `approx_count_distinct`
-    * (HyperLogLog++, fixed-size state regardless of cardinality) and
-    * `approx_percentile` (bounded-error quantile sketch). Exact
-    * countDistinct re-shuffles each column's values; the sketches keep
-    * the whole profile one partial-aggregable scan with O(cols) state
-    * per partition.
-    *
-    * @param rsd relative error for the distinct-count sketch
-    * @param percentileAccuracy 1/eps for the quantile sketch
-    */
-  def summarizeApprox(df: DataFrame, numericCols: Seq[String],
-                      rsd: Double = 0.02,
-                      percentileAccuracy: Int = 10000): DataFrame =
-    profile(df, numericCols, c => approx_count_distinct(c, rsd),
-      (d, p) => percentile_approx(d, lit(p), lit(percentileAccuracy)))
 }

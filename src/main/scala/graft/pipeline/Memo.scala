@@ -3,7 +3,6 @@ package graft.pipeline
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
-import graft.Scope
 
 /** Session-scoped memo for flagship pipeline results.
   *
@@ -26,49 +25,24 @@ import graft.Scope
   * retained. Two live sessions alternating would thrash the memo -
   * acceptable: every harness runs one session.
   *
-  * Ownership: the memo owns what its builds made persistent (the
-  * minhash-pairs localCheckpoint, cache entries the flagship run left),
-  * so a [[graft.Scope]] leaves it alone and the memoized plans, rooted at
-  * those RDDs, stay runnable across queries. [[clear]] drops the slot and
-  * then releases them. Prefix-sum pins are the exception: a pin belongs
-  * to the innermost open pin scope (ShardedPrefixSum.scoped), so one a
-  * build made goes when that scope exits - at the latest, at the end of
-  * the query's [[graft.Scope]]. A previous session's
-  * RDDs dropped with its slot are not unpersisted here; they go when
-  * that session stops or the context cleaner reaches them.
+  * The rule for a memoized value: it is driver data, a path, or a frame
+  * rooted at files (a phase-store table, a scratch parquet). It never
+  * needs a persisted RDD or cache entry, so whatever a build made
+  * persistent is released with the query that ran the build, like any
+  * other operator persist, and the value stays runnable after that.
   */
 object Memo {
   private final class Slot(val session: java.lang.ref.WeakReference[SparkSession]) {
     val values = TrieMap.empty[String, Any]
-    var owned: Scope.Held = Scope.Held.empty
   }
   private var slot: Slot = null
 
   def once[T](spark: SparkSession, key: String)(build: => T): T = synchronized {
     if (slot == null || !(slot.session.get eq spark))
       slot = new Slot(new java.lang.ref.WeakReference(spark))
-    val s = slot
-    s.values.getOrElse(key, {
-      val before = Scope.held(spark)
-      val v = build
-      s.owned = s.owned ++ (Scope.held(spark) -- before)
-      s.values.put(key, v)
-      v
-    }).asInstanceOf[T]
+    slot.values.getOrElseUpdate(key, build).asInstanceOf[T]
   }
 
-  /** What the current memo of `spark` owns. */
-  private[graft] def owned(spark: SparkSession): Scope.Held = synchronized {
-    if (slot != null && (slot.session.get eq spark)) slot.owned
-    else Scope.Held.empty
-  }
-
-  /** Drops every memoized result, then releases what their builds made
-    * persistent. */
-  def clear(): Unit = {
-    val old = synchronized { val s = slot; slot = null; s }
-    if (old != null) Option(old.session.get)
-      .filterNot(_.sparkContext.isStopped)
-      .foreach(Scope.release(_, old.owned))
-  }
+  /** Drops every memoized result. */
+  def clear(): Unit = synchronized { slot = null }
 }

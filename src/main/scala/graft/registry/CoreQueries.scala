@@ -71,7 +71,8 @@ object CoreQueries {
       // production phase persistence: every phase boundary writes a
       // bucketed parquet state table and the plan restarts from the
       // store read - so the benched/oracled flagship pays the real
-      // state write+read cost, not a localCheckpoint stand-in
+      // state write+read cost, and the memoized picks are rooted at
+      // files (see pipeline.Memo)
       val prefix = "graft_fs_" + dir.replaceAll("[^A-Za-z0-9]", "_")
       // state tables are session-lifetime scratch under the shared
       // scratch root (one JVM shutdown hook removes the whole tree;
@@ -93,7 +94,7 @@ object CoreQueries {
       // production phase persistence, same contract as pipelinePicks:
       // the benched AGR flagship pays the real bucketed write+read at
       // its three phase boundaries (recoverable on process loss, unlike
-      // the localCheckpoint stand-in)
+      // the in-process stand-in)
       val prefix = "graft_agr_" + dir.replaceAll("[^A-Za-z0-9]", "_")
       val base = scratchDir("graft_agr_state").toString
       graft.pipeline.AgrPipeline.run(

@@ -86,17 +86,21 @@ private[registry] object Shared {
   /** md5-permutation minhash pairs over `documents`, computed once per
     * (session, sf dir) and shared by q_d_minhash_md5 and q_d_dedup_e2e
     * (pipeline.Memo - the same one-computation-N-projections topology
-    * as the flagship). localCheckpoint materializes the pair list so
-    * the e2e query's component rounds iterate over an already-computed
-    * frame instead of replaying the signature build. q_d_simhash_md5
-    * stays standalone: its signature family (per-token md5 bit votes)
-    * shares no subtree with the shingle-permutation signatures here. */
+    * as the flagship). The pair list is written to a scratch parquet
+    * and the memo holds its read, so the e2e query's component rounds
+    * iterate over an already-computed frame instead of replaying the
+    * signature build, and the frame stays runnable after the building
+    * query's scope has released the shingle cache. The read takes the
+    * written frame's schema, so it starts no schema-inference job.
+    * q_d_simhash_md5 stays standalone: its signature family (per-token
+    * md5 bit votes) shares no subtree with the shingle-permutation
+    * signatures here. */
   def minhashMd5PairsShared(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Memo.once(s, s"minhash_md5_pairs:$dir") {
-      // the Checkpointed variant materializes eagerly AND releases the
-      // operator-internal shingle cache - only the O(pairs) checkpoint
-      // outlives this call (see Dedup.minhashMd5PairsCheckpointed)
-      Dedup.minhashMd5PairsCheckpointed(tDocsPar(s, dir))
+      val pairs = Dedup.minhashMd5Pairs(tDocsPar(s, dir))
+      val out = scratchDir("graft_minhash_md5").toString
+      pairs.write.mode("overwrite").parquet(out)
+      s.read.schema(pairs.schema).parquet(out)
     }
 
   /** Trained BPE merge table (6 rounds over `documents`), computed once

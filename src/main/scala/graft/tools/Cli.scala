@@ -239,27 +239,31 @@ object Cli {
 
   /** One species load: run the pipeline, persist the new state, report
     * the X11 count diff. Returns the written (orthologs, associations)
-    * paths so the all-species loop can thread the evolving state. */
+    * paths so the all-species loop can thread the evolving state. The
+    * load runs in a [[graft.Scope]], so its phase checkpoints, operator
+    * persists and pins are released before the next species starts;
+    * only the written parquet outlives it. */
   private def runSpecies(out: String,
                          st: OrthologPipeline.State, speciesTypeKey: Int,
                          runTs: java.sql.Timestamp,
-                         rel: DataFrame): (String, String) = {
-    val name = Species.dim.find(_._1 == speciesTypeKey).map(_._2)
-      .getOrElse(speciesTypeKey.toString)
-    val r = OrthologPipeline.runSpecies(rel, st, speciesTypeKey, runTs)
-    val orthPath = s"$out/$name/orthologs"
-    val assocPath = s"$out/$name/associations"
-    write(r.orthologs, orthPath)
-    write(r.associations, assocPath)
-    // the reference's +N/-N status report (X11 shape)
-    val diff = Reports.orthologCountDiff(st.orthologs, r.orthologs,
-        rgdIds = Some(st.rgdIds))
-      .select("srcSpeciesTypeKey", "destSpeciesTypeKey", "diff")
-      .collect().map(_.toSeq.mkString(":")).mkString(" ")
-    println(s"SPECIES=$name ORTHOLOGS=${r.orthologs.count()} " +
-      s"ASSOCIATIONS=${r.associations.count()} DIFF[$diff]")
-    (orthPath, assocPath)
-  }
+                         rel: DataFrame): (String, String) =
+    graft.Scope(rel.sparkSession) {
+      val name = Species.dim.find(_._1 == speciesTypeKey).map(_._2)
+        .getOrElse(speciesTypeKey.toString)
+      val r = OrthologPipeline.runSpecies(rel, st, speciesTypeKey, runTs)
+      val orthPath = s"$out/$name/orthologs"
+      val assocPath = s"$out/$name/associations"
+      write(r.orthologs, orthPath)
+      write(r.associations, assocPath)
+      // the reference's +N/-N status report (X11 shape)
+      val diff = Reports.orthologCountDiff(st.orthologs, r.orthologs,
+          rgdIds = Some(st.rgdIds))
+        .select("srcSpeciesTypeKey", "destSpeciesTypeKey", "diff")
+        .collect().map(_.toSeq.mkString(":")).mkString(" ")
+      println(s"SPECIES=$name ORTHOLOGS=${r.orthologs.count()} " +
+        s"ASSOCIATIONS=${r.associations.count()} DIFF[$diff]")
+      (orthPath, assocPath)
+    }
 
   private def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)

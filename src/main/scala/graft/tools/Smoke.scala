@@ -45,11 +45,10 @@ object Smoke {
       .count()
     println(s"NULL_EMBEDDING_ANN_QUERIES=$nullAnnQueries")
 
-    // what the session holds outside the memo must be the same after
-    // the registry loop as before it: every query's scope released what
-    // it made, and nothing it did not make
-    def held = graft.Scope.held(spark) -- graft.pipeline.Memo.owned(spark)
-    val held0 = held
+    // what the session holds must be the same after the registry loop
+    // as before it: every query's scope released what it made, and
+    // nothing it did not make
+    val held0 = graft.Scope.held(spark)
     val unmat0 = graft.operators.ShardedPrefixSum.unmaterializedReleases
 
     var planBad = 0
@@ -65,7 +64,7 @@ object Smoke {
     val failed = runs.count(_.failed)
     println(s"QUERIES_OK=${runs.size - failed} FAILED=$failed")
     println(s"PLAN_VIOLATIONS=$planBad")
-    val held1 = held
+    val held1 = graft.Scope.held(spark)
     val (added, dropped) = (held1 -- held0, held0 -- held1)
     // pins added in the loop are counted in `added`
     val left = added.size + dropped.size + (held1 -- added).pins.size

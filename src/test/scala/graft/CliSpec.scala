@@ -131,7 +131,14 @@ class CliSpec extends SparkSpec {
     }
     def state(dir: String, table: String) = hash(spark.read.parquet(s"$dir/$table"))
     val all = tmp()
+    val held0 = Scope.held(spark)
     assert(Cli.run(Array("--species", "all", "--sfDir", sf, "--out", all), spark) == 0)
+    // each species run released its phase checkpoints, persists and
+    // pins: nothing was added, and no cache entry held before was lost
+    // (a persistent RDD held before may have been garbage-collected)
+    val held1 = Scope.held(spark)
+    assert((held1 -- held0).size == 0, "left by --species all")
+    assert((held0 -- held1).entries.isEmpty)
     val rat = tmp()
     assert(Cli.run(Array("--species", "rat", "--sfDir", sf, "--out", rat), spark) == 0)
     // mouse runs first, over the fixture snapshot

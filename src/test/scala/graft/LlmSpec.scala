@@ -836,23 +836,6 @@ class LlmSpec extends SparkSpec {
     }
   }
 
-  test("approx profile tracks the exact profile within sketch error") {
-    val t = (1 to 20000).map(i => i.toLong).toDF("a")
-    val exact = graft.operators.Profile.summarize(t, Seq("a")).collect().head
-    val approx = graft.operators.Profile.summarizeApprox(t, Seq("a"))
-      .collect().head
-    assert(approx.getString(0) == "a" && approx.getLong(1) == 20000)
-    // HLL++ at rsd=0.02: allow 3 sigma
-    val nd = approx.getLong(3).toDouble
-    assert(math.abs(nd - 20000) / 20000 < 0.06, s"distinct $nd")
-    assert(approx.getDouble(4) == exact.getDouble(4)) // min exact
-    assert(approx.getDouble(5) == exact.getDouble(5)) // max exact
-    // quantile sketch at accuracy 10000 on 20k rows: within 1% of exact
-    for (i <- 6 to 8)
-      assert(math.abs(approx.getDouble(i) - exact.getDouble(i)) <= 200.0,
-        s"quantile field $i: ${approx.getDouble(i)} vs ${exact.getDouble(i)}")
-  }
-
   test("multimodal: metadata prunes, frames sample, stub features are stable") {
     val assets = Multimodal.syntheticAssets(docs, "doc_id", "text")
     assert(assets.schema.fieldNames.toSeq ==

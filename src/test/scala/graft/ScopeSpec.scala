@@ -8,21 +8,26 @@ import graft.registry.{Q, Registry}
 
 /** A registry query run through [[Scope]] releases everything it
   * materialized - pins, operator persists, checkpoints, memory-sink
-  * views - while what the memo built survives until [[Memo.clear]]. */
+  * views - memo builds included: a memoized value stays runnable
+  * without any of them. */
 class ScopeSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def persistent: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-  private def nonMemo: Set[Int] = persistent -- Memo.owned(spark).rdds.keys
   private def views: Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
   private def cacheEntries: Int = Scope.held(spark).entries.size
 
+  /** Drops every cache entry and persistent RDD of the session. */
+  private def dropAll(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
   /** Starts a test from an empty session: earlier suites share it. */
   private def clean(): Unit = {
     Memo.clear()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    dropAll()
   }
 
   private def noop(name: String, df: DataFrame): Unit =
@@ -43,47 +48,39 @@ class ScopeSpec extends SparkSpec {
 
   // q_pack_chunks: a prefix-sum pin; q_llm_prep_e2e: an operator persist;
   // q_d_dedup_e2e: the connected-components checkpoint and the minhash
-  // memo; q_stream_contam: a memory-sink view
+  // memo build's shingle persist; q_stream_contam: a memory-sink view
   for (name <- Seq("q_pack_chunks", "q_llm_prep_e2e", "q_d_dedup_e2e",
     "q_stream_contam")) {
     test(s"$name leaves no persistent RDD, pin, cache entry or temp view") {
       clean()
-      val (rdds0, pins0, views0) = (nonMemo, livePins, views)
-      val entries0 = cacheEntries - Memo.owned(spark).entries.size
+      val (rdds0, pins0, views0, entries0) =
+        (persistent, livePins, views, cacheEntries)
       assert(!runOne(name)().failed)
-      assert(nonMemo == rdds0)
+      assert(persistent == rdds0)
       assert(livePins == pins0)
       assert(views == views0)
-      assert(cacheEntries - Memo.owned(spark).entries.size == entries0)
+      assert(cacheEntries == entries0)
     }
   }
 
-  test("a memoized query gives the same content in two scopes, and what " +
-    "the memo built survives the first") {
-    clean()
-    var hashes = Seq.empty[Seq[String]]
-    runOne("q_d_minhash_md5")((_, df) => hashes :+= content(df))
-    val owned = Memo.owned(spark).rdds.keySet
-    assert(owned.nonEmpty, "the minhash memo owns its localCheckpoint")
-    assert(owned.subsetOf(persistent))
-    runOne("q_d_minhash_md5")((_, df) => hashes :+= content(df))
-    assert(Memo.owned(spark).rdds.keySet == owned)
-    assert(hashes.size == 2 && hashes.head.nonEmpty && hashes(0) == hashes(1))
-  }
-
-  test("Memo.clear returns the persistent RDDs and cache entries to their " +
-    "state before the memo") {
+  // memo builds included: the session holds what it held before
+  test("q_pipeline_counts and q_d_minhash_md5 leave no persistent RDD or cache entry") {
     clean()
     val (rdds0, entries0) = (persistent, cacheEntries)
     runOne("q_pipeline_counts")()
     runOne("q_d_minhash_md5")()
-    val owned = Memo.owned(spark)
-    assert(owned.rdds.nonEmpty && owned.entries.nonEmpty,
-      "the flagship run leaves cache entries, the minhash memo a checkpoint")
-    assert(persistent == rdds0 ++ owned.rdds.keySet)
-    Memo.clear()
     assert(persistent == rdds0)
     assert(cacheEntries == entries0)
+  }
+
+  // the memoized pairs are rooted at files, not at a checkpoint
+  test("q_d_minhash_md5 reruns after every persistent RDD and cache entry is dropped") {
+    clean()
+    var rows = Seq.empty[Seq[String]]
+    runOne("q_d_minhash_md5")((_, df) => rows :+= content(df))
+    dropAll()
+    runOne("q_d_minhash_md5")((_, df) => rows :+= content(df))
+    assert(rows.size == 2 && rows.head.nonEmpty && rows(0) == rows(1))
   }
 
   test("a query whose plan throws at execution leaves nothing behind and " +

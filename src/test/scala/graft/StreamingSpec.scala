@@ -32,29 +32,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Set(("click", 2L, 3.0), ("view", 1L, 5.0)))
   }
 
-  test("append-mode file sink emits watermark-closed windows (scale path)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    // two early windows plus a late-hour event that advances the
-    // watermark far enough to close them
-    input.addData(
-      Event(1, ts(1), 7, "click", 1.0),
-      Event(2, ts(2), 7, "click", 2.0),
-      Event(3, ts(12), 8, "view", 5.0),
-      Event(4, java.sql.Timestamp.valueOf("2026-08-01 12:00:00"), 9, "late", 1.0))
-    val out = java.nio.file.Files.createTempDirectory("stream_out").toString
-    val ckp = java.nio.file.Files.createTempDirectory("stream_ckp").toString
-    val query = EventStream.windowedTypeCountsToFiles(
-      input.toDF(), out, ckp, "10 minutes", "20 minutes")
-    query.awaitTermination()
-
-    val rows = spark.read.parquet(out)
-      .select("event_type", "n_events").as[(String, Long)].collect().toSet
-    // windows more than the watermark behind 12:00 are closed + emitted;
-    // the 12:00 window itself is still open -> not in the files
-    assert(rows == Set(("click", 2L), ("view", 1L)))
-  }
-
   test("streaming dedupe drops replayed event ids") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
@@ -150,61 +127,6 @@ class StreamingSpec extends SparkSpec {
     assert(batch.filter(_._3 != 1L) == streamed.filter(_._3 != 1L))
   }
 
-  test("keyed session state accumulates per user") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    input.addData(
-      Event(1, ts(1), 7, "click", 1.0),
-      Event(2, ts(2), 7, "click", 2.5),
-      Event(3, ts(3), 9, "view", 4.0))
-    val query = EventStream.userSessions(input.toDS(), timeoutMs = 0)
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-
-    val rows = spark.sql(
-      "SELECT user_id, n_events, sum_value, closed FROM sessions")
-      .as[(Long, Long, Double, Boolean)].collect().toSet
-    assert(rows == Set((7L, 2L, 3.5, false), (9L, 1L, 4.0, false)))
-  }
-
-  test("stream-stream interval join matches batch; bounds respected") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val views = MemoryStream[Event]
-    // user 7: view at :01, clicks at :02 (in 0-5min window), :20 (out);
-    // user 9: click at :02 with no view; user 8: view only
-    clicks.addData(
-      Event(10, ts(2), 7, "click", 1.0),
-      Event(11, ts(20), 7, "click", 1.0),
-      Event(12, ts(2), 9, "click", 1.0))
-    views.addData(
-      Event(20, ts(1), 7, "view", 1.0),
-      Event(21, ts(3), 8, "view", 1.0))
-    val joined = EventStream.intervalJoin(
-      clicks.toDF(), views.toDF(), key = "user_id",
-      loSec = 0, hiSec = 300)
-    val query = joined.select($"l_event_id", $"r_event_id")
-      .writeStream.format("memory").queryName("ij")
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    val rows = spark.sql("SELECT l_event_id, r_event_id FROM ij")
-      .as[(Long, Long)].collect().toSet
-    assert(rows == Set((10L, 20L)))
-
-    // the same operator over batch frames gives the same pairs
-    val bClicks = Seq(Event(10, ts(2), 7, "click", 1.0),
-      Event(11, ts(20), 7, "click", 1.0),
-      Event(12, ts(2), 9, "click", 1.0)).toDF()
-    val bViews = Seq(Event(20, ts(1), 7, "view", 1.0),
-      Event(21, ts(3), 8, "view", 1.0)).toDF()
-    val batch = EventStream.intervalJoin(bClicks, bViews, "user_id", 0, 300)
-      .select($"l_event_id", $"r_event_id").as[(Long, Long)].collect().toSet
-    assert(batch == rows)
-  }
-
   test("prep map stages (scrub + quality filter) run unchanged on a stream") {
     implicit val sqlCtx = spark.sqlContext
     val good = "the quick brown fox jumps over the lazy dog and then " +
@@ -233,41 +155,5 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Int, Int)].collect().toSet
     assert(streamed == batch && batch ==
       Set((1L, 1, 1), (2L, 0, 0)))
-  }
-
-  test("windowed streaming HLL registers equal the batch sketch per window") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    // users 7,8,7,9 in the 10:00 window; 8,7 in 10:10 - duplicates must
-    // fold into the same register state, and incremental max over two
-    // micro-batch adds must equal the one-shot batch registers
-    val events = Seq(
-      Event(1, ts(1), 7, "click", 1.0), Event(2, ts(2), 8, "view", 1.0),
-      Event(3, ts(3), 7, "click", 1.0), Event(4, ts(4), 9, "view", 1.0),
-      Event(5, ts(12), 8, "view", 1.0), Event(6, ts(13), 7, "click", 1.0))
-
-    val input = MemoryStream[Event]
-    input.addData(events.take(3): _*)
-    input.addData(events.drop(3): _*)
-    val q = EventStream.windowedHllRegisters(input.toDF(),
-        col("user_id").cast("string"), "10 minutes", "20 minutes")
-      .writeStream.format("memory").queryName("hll_stream")
-      .outputMode("update").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.sql(
-      """SELECT CAST(window.start AS STRING) AS w, bucket, max(m_j) AS m_j
-         FROM hll_stream GROUP BY 1, 2""") // update mode re-emits rows; max folds revisions
-      .as[(String, Long, Int)].collect().toSet
-
-    val batch = graft.llm.Sketches.hllRegisters(
-        events.toDF()
-          .select(date_trunc("minute", col("ts")).as("t0"), col("user_id"))
-          .withColumn("w", date_format(
-            expr("timestamp_seconds(floor(unix_timestamp(t0) / 600) * 600)"),
-            "yyyy-MM-dd HH:mm:ss")),
-        "w", col("user_id").cast("string"))
-      .as[(String, Long, Int)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
   }
 }
