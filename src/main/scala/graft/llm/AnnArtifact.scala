@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 /** ANN index-artifact persistence: IVF coarse centroids and PQ
   * codebooks as parquet tables under one directory - the train ->
   * ship -> search round trip an ANN index needs across sessions,
-  * completing the model-artifact story [[BpeArtifact]] /
-  * [[UnigramArtifact]] started for tokenizers. An index built once
-  * (k-means over a 100 TB corpus sample) is served by many later
-  * sessions; recomputing centroids per session is both wasted work
-  * and a correctness hazard (a re-trained index silently re-buckets
-  * the corpus).
+  * completing the model-artifact story [[BpeArtifact]] started for
+  * tokenizers. An index built once (k-means over a 100 TB corpus
+  * sample) is served by many later sessions; recomputing centroids
+  * per session is both wasted work and a correctness hazard (a
+  * re-trained index silently re-buckets the corpus).
   *
   * Layout: centroids as (cell, dim, value) rows, codebooks as
   * (codebook, code, dim, value) rows - long-form so the schema is

@@ -45,19 +45,4 @@ object Chunking {
         array_join(col("cw"), " ").as("chunk_text"),
         lit(overlap).as("chunk_overlap"))
   }
-
-  /** Reassembly check frame: per-document token count recovered from
-    * the chunks (each token counted once - overlap tokens belong to the
-    * earlier chunk). Equality with the source token count proves the
-    * chunking lossless; exposed for tests and data-quality gates.
-    *
-    * The overlap is read from the `chunk_overlap` column the chunk
-    * frame carries, so the check can never silently disagree with the
-    * parameters the chunks were actually built with. */
-  def chunkCoverage(chunks: DataFrame, idCol: String = "doc_id"): DataFrame =
-    chunks.groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_chunks"),
-        (sum(col("n_chunk_tokens"))
-          - max(col("chunk_overlap")).cast("long") * (count(lit(1)) - 1L))
-          .as("n_tokens_recovered"))
 }

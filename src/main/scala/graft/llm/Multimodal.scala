@@ -97,20 +97,6 @@ object Multimodal {
       i => (pmod(xxhash64(bytes, i), lit(100000)).cast("double") / 100000.0)
         .cast("float"))
 
-  /** STUB resize: a real kernel reencodes pixels; the fake derives new
-    * metadata and rehashes the payload so downstream stages see a
-    * changed asset. The metadata math (aspect-preserving clamp) is real. */
-  def resizeTo(df: DataFrame, maxSide: Int): DataFrame = {
-    val w = col("meta.width"); val h = col("meta.height")
-    val scale = least(lit(1.0), lit(maxSide).cast("double") / greatest(w, h))
-    df.withColumn("meta", struct(
-      ceil(w * scale).cast("int").as("width"),
-      ceil(h * scale).cast("int").as("height"),
-      col("meta.duration_ms").as("duration_ms"),
-      col("meta.sample_rate").as("sample_rate"),
-      col("meta.codec").as("codec")))
-  }
-
   /** Frame sampling plumbing: one output row per sampled frame at
     * `everyMs` intervals, frame payload stubbed as (bytes, frameIdx)
     * hash. posexplode keeps it a generator - no driver involvement. */

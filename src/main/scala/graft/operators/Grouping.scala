@@ -83,7 +83,12 @@ object Grouping {
     // same frame and reads this entry - releasing it before the reload
     // took that run's relations phase from 0.36 s to 4.6 s (sf0.1
     // ortholog flow on a 4-core VM, Resolve's id map released too). It
-    // lives until session stop.
+    // lives until session stop, and so do the broadcasts its plan holds:
+    // after the sf0.1 ortholog flow it stores 26 KB of rows but pins
+    // 64 MB, the two id-map probe tables of Resolve.resolveRelations
+    // (194 rows, one 32 MB Tungsten page each). Before those probes were
+    // hinted to build on the map it pinned 144 MB, the 600k relations
+    // taking 112 MB of it.
     val merged = merged0.persist()
     val fwd = merged.withColumn("groupId", col("srcRgdId"))
     val rev = merged.select(

@@ -102,25 +102,41 @@ object Resolve {
     // nodes so one resolution pass serves all consumers (lazy). Not
     // released by the run on purpose: a later run over the same
     // relations and dimension tables (the `--species` reload) reads this
-    // entry - see the note at Grouping.withComplementaryRelations.
+    // entry - see the note at Grouping.withComplementaryRelations. Its
+    // rows are small (8 KB for the ~200 sf0.1 ids), but its plan pins
+    // the broadcasts it was built with, 36.5 MB after the sf0.1
+    // ortholog flow: one Tungsten page (32 MB) for the 200-row
+    // string-keyed semi-join on egId, plus four long-keyed dimension
+    // tables of 1.1 MB each.
     val egMap = resolutionMap(ids, xrefs, genes, rgdIds, history).persist()
 
-    val srcMap = egMap.select(
+    // The id map is the build side of both probes, by hint: it holds one
+    // row per distinct gene id, so it is dimension-sized. At plan
+    // time Spark sizes a parquet scan by its compressed bytes, and the
+    // persisted map, until it is materialized, by its plan's estimate.
+    // Once a null-rejecting filter downstream (dropUnmapped) turns these
+    // left joins into inner joins, either side may be built, and without
+    // the hint the 600k-row sf0.1 relations (a few MB on disk) looked
+    // the smaller: the driver collected them into a 112 MB hash table,
+    // which every persisted frame whose plan holds the join (Grouping's
+    // `merged`) pinned until release.
+    val srcMap = broadcast(egMap.select(
       col("egId").as("srcOtherId"),
       col("outcome").as("srcOutcome"),
-      col("resolvedRgdId").as("srcResolved"))
-    val destMap = egMap.select(
+      col("resolvedRgdId").as("srcResolved")))
+    val destMap = broadcast(egMap.select(
       col("egId").as("destOtherId"),
       col("outcome").as("destOutcome"),
-      col("resolvedRgdId").as("destResolved"))
+      col("resolvedRgdId").as("destResolved")))
 
     // no persist here (r17): the map probes are two broadcast-hash
-    // joins over the PERSISTED egMap, so a caller consuming both
-    // outputs recomputes only the relations scan + two cached-build
-    // probes - while the cache write of this relations-sized frame
-    // costs more than that recompute for every caller (the registry's
-    // audit-only q_a6_resolve and the flagship's resolved-only chain
-    // each consume exactly one output; measured -0.5 s on q_a6_resolve)
+    // joins that build on the PERSISTED egMap and stream the relations,
+    // so a caller consuming both outputs recomputes only the relations
+    // scan + two cached-build probes - while the cache write of this
+    // relations-sized frame costs more than that recompute for every
+    // caller (the registry's audit-only q_a6_resolve and the flagship's
+    // resolved-only chain each consume exactly one output; measured
+    // -0.5 s on q_a6_resolve)
     val joined = relations
       .join(srcMap, Seq("srcOtherId"), "left")
       .join(destMap, Seq("destOtherId"), "left")

@@ -120,7 +120,6 @@ class AgrMultiRunPropertySpec extends SparkSpec {
         val out = AgrRefModel.run(mGenes, mXrefs, lines, mState, "500",
           ts(i), cut(i), counters)
         // run i+1 sees run i's writes
-        val insertedBefore = mGenes.map(_.id).max
         mGenes = mGenes ++ out.newGenes.toList.sortBy(_._1)
           .map(g => GeneRow(g._1, g._2, g._3, active = true))
         if (out.newGenes.nonEmpty && i > 0) sawIdContinuation += 1

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.operators.ShardedPrefixSum
-import graft.pipeline.AgrPipeline
 import graft.AgrRefModel.{AgrRow, GeneRow, Line, XrefRow}
 
 /** Brute-force semantic pin for the whole --agrOrthologs flow

@@ -85,7 +85,7 @@ class BpeSegmentSpec extends SparkSpec {
     // dummy rules over symbols absent from the corpus: same vocabulary
     // prefix, so every emitted id is identical; table size 71 forces
     // the BpeSegment path
-    val dummies = (1 to 64).map(i => ("§", "¶"))
+    val dummies = (1 to 64).map(_ => ("§", "¶"))
     def run(m: Seq[(String, String)]) =
       TextAnalysis.bpeEncode(docs, m)
         .select(col("doc_id"), col("n_tokens"),

@@ -166,7 +166,7 @@ class CascadePropertySpec extends SparkSpec {
       val alliance = for {
         (g, src, srcSp, destSp) <- keys
         (cnt, (aDest, m)) <- tier3.get((src, destSp)).toList
-        copy <- 1 to (if (cnt > 1) 2 else 1)
+        _ <- 1 to (if (cnt > 1) 2 else 1)
       } yield Pick(g, src, aDest, srcSp, destSp, "Alliance", Some(m), 3, "")
       val cands = incoming ++ manual ++ alliance
 

@@ -32,18 +32,6 @@ class ChunkingSpec extends SparkSpec {
     assert(r == Map(1L -> 2L, 2L -> 1L))
   }
 
-  test("chunkCoverage recovers exact token counts (lossless)") {
-    val docs = (1 to 40).map { i =>
-      (i.toLong, (1 to (i * 7 % 23 + 1)).map("w" + _).mkString(" "))
-    }.toDF("doc_id", "text")
-    val truth = docs.select(col("doc_id"),
-      size(TextAnalysis.normalizedWords(col("text"))).cast("long").as("n_tokens"))
-    val cov = Chunking.chunkCoverage(
-      Chunking.chunkDocuments(docs, chunkSize = 8, overlap = 3))
-      .select(col("doc_id"), col("n_tokens_recovered").as("n_tokens"))
-    assert(cov.exceptAll(truth).isEmpty && truth.exceptAll(cov).isEmpty)
-  }
-
   test("curationFunnel totals equal the per-doc filter verdicts") {
     val docs = Seq(
       (1L, "s1", "the cat sat on the mat and it was good for all of us"),

@@ -187,7 +187,7 @@ class GroupingCascadeSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 20) {
       val n = 1 + rnd.nextInt(5)
-      val rows = (0 until n).map { i =>
+      val rows = (0 until n).map { _ =>
         (2 + rnd.nextInt(8), if (rnd.nextBoolean()) "HGNC" else "NCBI",
           if (rnd.nextBoolean()) "A" else "A, B")
       }.groupBy(r => r._1).map(_._2.head).toSeq

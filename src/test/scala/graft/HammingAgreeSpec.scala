@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Equivalence pins for the two native candidate-pair verify
   * expressions added in the r17 optimization round, against the

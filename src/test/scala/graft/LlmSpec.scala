@@ -213,7 +213,6 @@ class LlmSpec extends SparkSpec {
     val r = Fim.fimTransform(docs, rate = 1.0).persist()
     try {
       val rows = r.as[(Long, String, Int, Int, Int, String)].collect()
-      val byId = rows.map(x => x._1 -> x).toMap
       val orig = docs.as[(Long, String)].collect().toMap
       rows.foreach { case (id, mode, np, nm, ns, text) =>
         val ws = orig(id).split(" ").toSeq
@@ -587,7 +586,6 @@ class LlmSpec extends SparkSpec {
     assert(fp(1L) == fp(2L)) // normalization collapses case+spaces
     assert(fp(1L) != fp(3L))
 
-    val toks = TextAnalysis.wordCount(lit("a b  c")).toString
     val r = Seq(("a b  c d!", 1)).toDF("text", "x")
       .select(TextAnalysis.wordCount($"text"),
         TextAnalysis.tokenCountBpeIsh($"text")).as[(Int, Int)].head()
@@ -843,11 +841,6 @@ class LlmSpec extends SparkSpec {
 
     val meta = Multimodal.metadataOnly(assets)
     assert(!meta.schema.fieldNames.contains("bytes"))
-
-    val resized = Multimodal.resizeTo(assets, 64)
-    val dims = resized.select(greatest($"meta.width", $"meta.height"))
-      .as[Int].collect()
-    assert(dims.forall(_ <= 64))
 
     val frames = Multimodal.sampleFrames(assets, everyMs = 60000)
     val counts = frames.groupBy("asset_id").count().as[(Long, Long)].collect()

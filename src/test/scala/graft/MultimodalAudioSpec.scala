@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Multimodal
 
 /** The REAL audio codec leg: javax.sound.sampled WAV/AIFF decode

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Multimodal
 
 /** The REAL image codec leg: JDK javax.imageio decode feeding the 8x8

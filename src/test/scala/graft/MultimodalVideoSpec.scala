@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Multimodal
 
 /** The video container leg: RIFF/AVI walk + JDK BMP frame decode.

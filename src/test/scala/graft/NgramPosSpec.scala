@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Equivalence pin for the native [[graft.functions.NgramPosArray]]
   * gram-position stream against the SQL formulation it replaced

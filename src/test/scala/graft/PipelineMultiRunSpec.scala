@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import graft.model.Species
 import graft.operators.Maintenance
 import graft.pipeline.OrthologPipeline
-import graft.AgrRefModel.{GeneRow, Line, XrefRow}
+import graft.AgrRefModel.Line
 
 /** Cross-run state-evolution pin for the species loop: the reference's
   * production shape is a LOOP over species against shared state
@@ -176,8 +176,6 @@ class PipelineMultiRunSpec extends SparkSpec {
       "idempotent re-run changed rat-pair state beyond the touch")
 
     // ---- AGR leg on the same chained universe ----
-    val geneList = geneRows.map { case (id, sym, sp) =>
-      GeneRow(id, sym, sp, active = true) }
     val agrLines = List(
       Line("FB:9", "fly9", 10, "FB:9", "fly9", 10, "OMA",
         best = true, bestRev = true))

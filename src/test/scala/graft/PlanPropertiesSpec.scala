@@ -1,12 +1,27 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import graft.operators.Cascade
 
 /** Physical-plan regression guards for the flagship operators: the
   * properties that matter at 100 TB must survive refactors. */
 class PlanPropertiesSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Every node of an executed plan, through AQE wrappers, query stages
+    * and reused exchanges. */
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
+    val next = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    p +: next.flatMap(flatten)
+  }
 
   test("cascade agg pick plans as map-side-combined hash aggregations, " +
     "no cartesian product, no window sorts") {
@@ -51,6 +66,51 @@ class PlanPropertiesSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
+  }
+
+  test("resolveRelations builds every broadcast on the id map, never on " +
+    "the relations") {
+    // relations read from a small parquet file, as Fixtures.relations
+    // reads lineitem: Spark sizes the scan by its compressed bytes, so
+    // without the hint the relations look smaller than the id map
+    val dir = java.nio.file.Files.createTempDirectory("resolve_bcast").toString
+    (1 to 400).map(i => (s"EG${1000 + i % 100 * 2}", s"EG${1001 + i * 7 % 100 * 2}",
+      if (i % 2 == 1) "HGNC" else "NCBI", if (i % 2 == 1) "OMA" else "Ortholog"))
+      .toDF("srcOtherId", "destOtherId", "dataSource", "dataSetName")
+      .write.parquet(s"$dir/relations")
+    val relations = spark.read.parquet(s"$dir/relations")
+    val ids = (0 until 100).flatMap(i => Seq(1000 + 2 * i, 1001 + 2 * i))
+    val xrefs = ids.map(id => (id.toLong, id, graft.model.XdbKeys.ENTREZGENE,
+        s"EG$id", "p", java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+      .toDF("accXdbKey", "rgdId", "xdbKey", "accId", "srcPipeline",
+        "modificationDate")
+    val genes = ids.map(id => (id, s"g$id", s"g$id", "protein-coding", 1, s"g$id"))
+      .toDF("rgdId", "geneSymbol", "geneName", "geneTypeLc",
+        "speciesTypeKey", "ensemblGeneSymbol")
+    val rgdIds = ids.map(id => (id, "ACTIVE", 1))
+      .toDF("rgdId", "objectStatus", "speciesTypeKey")
+    val history = Seq.empty[(Int, Int)].toDF("oldRgdId", "newRgdId")
+
+    Scope(spark) {
+      val (resolved, _) = graft.operators.Resolve.resolveRelations(
+        relations, xrefs, genes, rgdIds, history)
+      // `resolved` as OrthologPipeline.picks reads it first, while the
+      // persisted id map is not yet materialized: dropUnmapped's
+      // null-rejecting filter turns both left joins into inner joins,
+      // which Spark may build on either side
+      for (df <- Seq(graft.operators.Resolve.dropUnmapped(resolved), resolved)) {
+        // an action on `df` itself, so AQE finalizes the plan read below
+        assert(df.collect().length == 400) // every id resolves
+        val plan = flatten(df.queryExecution.executedPlan)
+        val builds = plan.collect { case b: BroadcastExchangeExec => b }
+        assert(builds.nonEmpty, plan.head.toString)
+        for (b <- builds) {
+          val cols = b.output.map(_.name).toSet
+          assert(!cols.contains("dataSource") && !cols.contains("dataSetName"),
+            s"the relations are a broadcast build side:\n${plan.head}")
+        }
+      }
+    }
   }
 
   test("mixture repeat plans the cutoff attach as a broadcast join, " +
@@ -171,23 +231,11 @@ class PlanPropertiesSpec extends SparkSpec {
   test("every BroadcastNestedLoopJoin build side is a <=1-row scalar " +
     "frame (the documented scalar-attach convention, enforced)") {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
     import org.apache.spark.sql.execution.{InputAdapter, LocalTableScanExec, ProjectExec, WholeStageCodegenExec}
     import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val next = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case r: ReusedExchangeExec => Seq(r.child)
-        case _ => p.children
-      }
-      p +: next.flatMap(flatten)
-    }
     @annotation.tailrec
     def unwrap(p: SparkPlan): SparkPlan = p match {
       case q: QueryStageExec => unwrap(q.plan)

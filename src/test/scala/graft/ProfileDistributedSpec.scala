@@ -137,7 +137,6 @@ class ProfileDistributedSpec extends SparkSpec {
 
   test("a key product composed early in a scope and compiled only after " +
     "10 more prefix sums still reads its pin: the keys are exact") {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.col
     // key products are handed to callers for late compilation (a
     // pipeline Result's association branch); a pin released before
@@ -150,8 +149,6 @@ class ProfileDistributedSpec extends SparkSpec {
     ShardedPrefixSum.scoped {
       val keyed = graft.operators.Keys.assignSequential(
         rows.toDF("a", "b"), "key", 500L, Seq(col("a"), col("b")))
-      val w = Window.partitionBy("stratum").orderBy("ord")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       for (i <- 1 to 10) {
         val d = (1 to 100).map(j =>
           ((j % 3).toString, j.toLong, (j % 5).toLong + i)).toDF("stratum", "ord", "x")

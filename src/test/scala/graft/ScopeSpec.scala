@@ -30,8 +30,8 @@ class ScopeSpec extends SparkSpec {
     dropAll()
   }
 
-  private def noop(name: String, df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  private val noop: (String, DataFrame) => Unit =
+    (_, df) => df.write.format("noop").mode("overwrite").save()
 
   private def runOne(name: String, queries: Seq[Q] = Registry.all)(
       sink: (String, DataFrame) => Unit = noop): Scope.Run = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sources.StateStore
 
 /** Bucketed state tables: equi-joins on the bucket key must plan with NO

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.TemporalJoins
 
 /** As-of and range joins vs brute-force references, plus the plan-shape

@@ -135,29 +135,4 @@ class UnigramSpec extends SparkSpec {
     assert(Unigram.costOf(50, 100) == math.round(-1000.0 * math.log(0.5)))
     assert(Unigram.costOf(1, 1000) == math.round(1000.0 * math.log(1000.0)))
   }
-
-  test("artifact round trip: encode under the loaded vocabulary equals " +
-    "encode under the trained one") {
-    val docs = Seq(
-      (1L, "banana banana banana band"),
-      (2L, "banana bandana"),
-      (3L, "ana ana nab")
-    ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("unigram_artifact").toString
-    val n = graft.llm.UnigramArtifact.trainAndSave(docs, rounds = 2, dir)
-    assert(n > 0)
-    val loaded = graft.llm.UnigramArtifact.loadCosts(spark, dir)
-    val direct = Unigram.withCosts(
-      Unigram.train(docs, rounds = 2).as[(String, Long)].collect().toSeq)
-    // same (piece, cost) set - counts persist as exact integers
-    assert(loaded.toMap == direct.toMap)
-    // and a NEW corpus encodes identically under loaded vs direct costs
-    val fresh = Seq((9L, "bandana ban and banana")).toDF("doc_id", "text")
-    val a = Unigram.encode(fresh, loaded)
-      .as[(Long, Int, Int, String)].collect().toSet
-    val b = Unigram.encode(fresh, direct)
-      .as[(Long, Int, Int, String)].collect().toSet
-    assert(a == b && a.nonEmpty)
-  }
 }
